@@ -1,13 +1,14 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** CSV batch source with reject quarantine — parity with the reference's
   * Greenplum `LOG ERRORS SEGMENT REJECT LIMIT n` external tables
   * (SURVEY.md §2B B1): malformed rows are captured, not fatal, and the
-  * batch fails only when rejects exceed a limit.
+  * batch fails only when rejects exceed a limit. The PERMISSIVE reader
+  * and the reject split are shared with [[JsonSource]].
   */
 object CsvSource {
 
@@ -19,27 +20,30 @@ object CsvSource {
     * long-lived session or bench loop, not calling it leaks one
     * InMemoryRelation per ingest.
     */
-  final case class ReadResult(valid: DataFrame, rejects: DataFrame,
-                              unpersist: () => Unit = () => ())
+  final case class ReadResult(valid: DataFrame, rejects: DataFrame, unpersist: () => Unit)
 
   private val CORRUPT = "_graft_corrupt"
 
-  /** Read CSV files under `path` with the declared schema in PERMISSIVE
-    * mode. Rows that fail to parse land in `rejects` with their raw
-    * line; valid rows come back with exactly the declared schema.
+  /** Read the CSV files (or directories/globs) `paths` with the declared
+    * schema in PERMISSIVE mode. Rows that fail to parse land in
+    * `rejects` with their raw line; valid rows come back with exactly
+    * the declared schema.
     */
-  def read(spark: SparkSession, schema: StructType, path: String,
-           header: Boolean = true): ReadResult = {
-    val withCorrupt = StructType(schema.fields :+ StructField(CORRUPT, StringType, nullable = true))
-    val raw = spark.read
-      .schema(withCorrupt)
-      .option("header", header.toString)
+  def read(spark: SparkSession, schema: StructType, paths: String*): ReadResult =
+    split(permissive(spark, schema).option("header", "true").csv(paths: _*))
+
+  /** A reader for `schema` plus the corrupt-record column. */
+  private[ingest] def permissive(spark: SparkSession, schema: StructType): DataFrameReader =
+    spark.read
+      .schema(StructType(schema.fields :+ StructField(CORRUPT, StringType, nullable = true)))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", CORRUPT)
-      .csv(path)
-      // PERMISSIVE parsing is lazy per column; cache so the corrupt
-      // marker is populated consistently for both branches.
-      .cache()
+
+  /** Route a [[permissive]] read into valid rows and rejects. */
+  private[ingest] def split(read: DataFrame): ReadResult = {
+    // PERMISSIVE parsing is lazy per column; cache so the corrupt
+    // marker is populated consistently for both branches.
+    val raw = read.cache()
     val valid = raw.filter(col(CORRUPT).isNull).drop(CORRUPT)
     val rejects = raw.filter(col(CORRUPT).isNotNull)
       .select(col(CORRUPT).as("raw_line"))

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * cost of one batch, not a rewrite.
   *
   * Layout expected under `uploadDir`:
-  *   <table>/<batch>.csv            data files (any number)
+  *   <table>/<batch>.csv[.gz]       data files (any number, none is fine)
   *   <table>/manifest.txt           column manifest (Manifest.parse)
   */
 object Ingest {
@@ -63,11 +63,14 @@ object Ingest {
     val tables = fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath).sortBy(_.getName).toSeq
     tables.map { dir =>
-      try loadTable(spark, conf, fs, dir)
+      val table = dir.getName
+      // the one file list per table: what is read is what is archived
+      // or quarantined (a partial `b.csv.tmp` upload is none of them)
+      val files = listCsv(fs, dir)
+      if (files.isEmpty) TableReport(table, Nil, 0, 0, Nil)
+      else try loadTable(spark, conf, fs, dir, files)
       catch {
         case e: Exception =>
-          val table = dir.getName
-          val files = listCsv(fs, dir)
           // Default quarantine root: a sibling of the archive dir. Built
           // with Path.getParent, not a literal "..", which HDFS rejects
           // as an invalid path component.
@@ -116,17 +119,16 @@ object Ingest {
   def readLake(spark: SparkSession, conf: Config, table: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(s"${conf.lakeDir}/$table")
 
-  private def loadTable(spark: SparkSession, conf: Config,
-                        fs: FileSystem, dir: Path): TableReport = {
+  private def loadTable(spark: SparkSession, conf: Config, fs: FileSystem,
+                        dir: Path, files: Seq[String]): TableReport = {
     val table = dir.getName
     val manifest = {
       val in = fs.open(new Path(dir, "manifest.txt"))
       try Manifest.parse(new String(in.readAllBytes(), "UTF-8"))
       finally in.close()
     }
-    val files = listCsv(fs, dir)
 
-    val res = CsvSource.read(spark, manifest, s"$dir/*.csv*")
+    val res = CsvSource.read(spark, manifest, files: _*)
     val rejected = CsvSource.enforceRejectLimit(res, conf.rejectLimit)
 
     // Add-only evolution: conform this batch to live-schema ∪ manifest.
@@ -136,7 +138,7 @@ object Ingest {
     val fullRefresh = conf.fullRefreshTables.contains(table)
     val (aligned, evolvedCols) =
       if (LakeFs.isDirectory(spark, target)) {
-        val live = spark.read.option("mergeSchema", "true").parquet(target).schema
+        val live = readLake(spark, conf, table).schema
         val evolved = SchemaEvolution.evolve(live, res.valid.schema)
         val newCols = evolved.fieldNames.diff(live.fieldNames).toSeq
         (SchemaEvolution.align(res.valid, evolved), newCols)
@@ -158,21 +160,11 @@ object Ingest {
     // must throw BEFORE anything lands in the lake.
     val obs = new org.apache.spark.sql.Observation()
     val observed = deduped.observe(obs, count(lit(1)).as("n_loaded"))
-    if (fullRefresh) {
-      // the reference's dimension class: stage-and-swap — write the new
-      // generation beside the live one, then two renames (atomic on
-      // HDFS/local; see LakeFs for the S3A caveat). Readers never see a
-      // partially-replaced table.
-      val lakeFsys = LakeFs.fs(spark, target)
-      val stage = target + "__stage"
-      observed.write.mode(SaveMode.Overwrite).parquet(stage)
-      if (lakeFsys.exists(new Path(target)))
-        LakeFs.swap(spark, target, stage, tag = "refresh")
-      else if (!lakeFsys.rename(new Path(stage), new Path(target)))
-        throw new java.io.IOException(s"rename $stage -> $target failed")
-    } else {
-      observed.write.mode(SaveMode.Append).parquet(target)
-    }
+    // Full refresh is the reference's dimension class: stage-and-swap
+    // (LakeFs.replace), so readers never see a partially-replaced table.
+    if (fullRefresh)
+      LakeFs.replace(spark, target, tag = "refresh")(observed.write.mode(SaveMode.Overwrite).parquet)
+    else observed.write.mode(SaveMode.Append).parquet(target)
     val loaded = obs.get("n_loaded").asInstanceOf[Long]
 
     // Both branches of the read are materialized by now (valid via the

@@ -1,8 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 /** JSON-lines batch source with reject quarantine — the same
   * PERMISSIVE + corrupt-column routing contract as [[CsvSource]]
@@ -10,41 +9,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * import pipeline where payloads arrive as NDJSON rather than CSV.
   * Type mismatches, truncated objects, and non-JSON lines all land in
   * `rejects` with the raw line preserved; schema drift beyond the
-  * declared fields is ignored (add-only evolution is B2's job).
+  * declared fields is ignored (add-only evolution is B2's job). Gate
+  * the result with [[CsvSource.enforceRejectLimit]].
   */
 object JsonSource {
 
-  /** `unpersist()` releases the internal cache backing both branches —
-    * same contract as [[CsvSource.ReadResult]]: call only after both
-    * branches are materialized; skipping it in a long-lived session
-    * leaks one InMemoryRelation per ingest.
-    */
-  final case class ReadResult(valid: DataFrame, rejects: DataFrame,
-                              unpersist: () => Unit = () => ())
-
-  private val CORRUPT = "_graft_corrupt"
-
-  def read(spark: SparkSession, schema: StructType, path: String): ReadResult = {
-    val withCorrupt =
-      StructType(schema.fields :+ StructField(CORRUPT, StringType, nullable = true))
-    val raw = spark.read
-      .schema(withCorrupt)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CORRUPT)
-      .json(path)
-      // PERMISSIVE parsing is lazy per column; cache so the corrupt
-      // marker is populated consistently for both branches.
-      .cache()
-    val valid = raw.filter(col(CORRUPT).isNull).drop(CORRUPT)
-    val rejects = raw.filter(col(CORRUPT).isNotNull)
-      .select(col(CORRUPT).as("raw_line"))
-    ReadResult(valid, rejects, () => { raw.unpersist(); () })
-  }
-
-  def enforceRejectLimit(r: ReadResult, limit: Long): Long = {
-    val n = r.rejects.count()
-    if (n > limit)
-      throw new IllegalStateException(s"reject limit exceeded: $n > $limit")
-    n
-  }
+  def read(spark: SparkSession, schema: StructType, paths: String*): CsvSource.ReadResult =
+    CsvSource.split(CsvSource.permissive(spark, schema).json(paths: _*))
 }

@@ -47,18 +47,32 @@ object LakeFs {
     loop(new Path(path), Vector.empty)
   }
 
-  /** Stage-and-swap: `dst` → `<dst>__<tag>_old` → deleted, `tmp` → `dst`.
-    * Each rename is atomic on HDFS/local (see class doc for S3A); the
-    * window between the two renames has no directory at `dst`.
+  /** Where a stage-and-swap of `dst` writes before [[swap]]. */
+  def stagePath(dst: String, tag: String): String = dst.stripSuffix("/") + s"__${tag}_tmp"
+
+  /** Stage-and-swap: `write` fills [[stagePath]], which then replaces
+    * `dst` (see [[swap]]).
+    */
+  def replace(spark: SparkSession, dst: String, tag: String)(write: String => Unit): Unit = {
+    val tmp = stagePath(dst, tag)
+    write(tmp)
+    swap(spark, dst, tmp, tag)
+  }
+
+  /** `dst` → `<dst>__<tag>_old` → deleted, `tmp` → `dst`; a single
+    * rename when `dst` does not exist yet. Each rename is atomic on
+    * HDFS/local (see class doc for S3A); the window between the two
+    * renames has no directory at `dst`.
     */
   def swap(spark: SparkSession, dst: String, tmp: String, tag: String): Unit = {
     val f = fs(spark, dst)
     val dstP = new Path(dst)
     val bakP = new Path(dst.stripSuffix("/") + s"__${tag}_old")
-    if (!f.rename(dstP, bakP))
+    val hadOld = f.exists(dstP)
+    if (hadOld && !f.rename(dstP, bakP))
       throw new java.io.IOException(s"swap: rename $dstP -> $bakP failed")
     if (!f.rename(new Path(tmp), dstP))
       throw new java.io.IOException(s"swap: rename $tmp -> $dstP failed")
-    f.delete(bakP, true) // best-effort cleanup of the old generation
+    if (hadOld) f.delete(bakP, true) // best-effort cleanup of the old generation
   }
 }

@@ -25,17 +25,6 @@ object ParquetSink {
       .mode(mode)
       .parquet(path)
 
-  def readLake(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Partition columns of a lake directory, detected from its Hive-style
-    * `name=value` layout (the same discovery Spark itself performs).
-    * Empty for an unpartitioned lake. Goes through the Hadoop FileSystem
-    * API so detection works on HDFS/S3A lakes, not just local paths.
-    */
-  def partitionColumns(spark: SparkSession, path: String): Seq[String] =
-    LakeFs.partitionColumns(spark, path)
-
   /** Compact a lake directory in place: rewrite to ~`targetPartitions`
     * files per write, PRESERVING the lake's partition layout (a flat
     * rewrite of a year/month lake would silently destroy partition
@@ -50,14 +39,12 @@ object ParquetSink {
     * should retry, or compaction should run in a maintenance window.
     */
   def compact(spark: SparkSession, path: String, targetPartitions: Int): Unit = {
-    val partCols = partitionColumns(spark, path)
-    val tmp = path.stripSuffix("/") + "__compact_tmp"
+    val partCols = LakeFs.partitionColumns(spark, path)
     val df = spark.read.parquet(path)
     val writer =
       if (partCols.isEmpty) df.repartition(targetPartitions).write
       else df.repartition(targetPartitions, partCols.map(col): _*)
         .write.partitionBy(partCols: _*)
-    writer.mode(SaveMode.Overwrite).parquet(tmp)
-    LakeFs.swap(spark, path, tmp, tag = "compact")
+    LakeFs.replace(spark, path, tag = "compact")(writer.mode(SaveMode.Overwrite).parquet)
   }
 }

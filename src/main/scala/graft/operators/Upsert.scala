@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ingest.LakeFs
 
 /** Keyed upsert (MERGE) into a parquet lake — the third load mode next
   * to append and stage-and-swap full refresh (graft.ingest.JdbcSink):
@@ -36,10 +38,8 @@ object Upsert {
     * micro-batch is avoidable overhead. */
   def merge(spark: SparkSession, path: String, incoming: DataFrame,
             keys: Seq[String], versionCol: String): Unit = {
-    import graft.ingest.LakeFs
-    val exists = LakeFs.isDirectory(spark, path)
     val merged =
-      if (!exists) dedupLatest(incoming, keys, versionCol)
+      if (!LakeFs.isDirectory(spark, path)) dedupLatest(incoming, keys, versionCol)
       else {
         val existing = spark.read.parquet(path)
         val all = existing.withColumn("graft_src", lit(0))
@@ -47,16 +47,7 @@ object Upsert {
         dedupLatest(all, keys, versionCol, srcCol = Some("graft_src"))
           .drop("graft_src")
       }
-    if (!exists) {
-      merged.write.mode(SaveMode.Overwrite).parquet(path)
-    } else {
-      // stage-and-swap through the Hadoop FileSystem API (HDFS/S3A
-      // portable; brief no-directory window between the renames — see
-      // LakeFs.swap for per-store atomicity)
-      val tmp = path.stripSuffix("/") + "__upsert_tmp"
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      LakeFs.swap(spark, path, tmp, tag = "upsert")
-    }
+    LakeFs.replace(spark, path, tag = "upsert")(merged.write.mode(SaveMode.Overwrite).parquet)
   }
 
   /** Partition-scoped MERGE into a Hive-layout lake partitioned by
@@ -86,51 +77,40 @@ object Upsert {
   def intoPartitionedParquet(spark: SparkSession, path: String, incoming: DataFrame,
                              keys: Seq[String], versionCol: String,
                              partCol: String): Long = {
-    import graft.ingest.LakeFs
-    import org.apache.hadoop.fs.Path
-    if (!LakeFs.isDirectory(spark, path)) {
-      dedupLatest(incoming, keys, versionCol)
-        .write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(path)
-    } else {
-      val touched = incoming.select(col(partCol)).distinct().collect()
-        .map(_.get(0))
-      val touchedNonNull = touched.filter(_ != null)
-      // Null partition values land in __HIVE_DEFAULT_PARTITION__; scope
-      // the existing-side read to include them iff the batch has them,
-      // so their lake copies join the merge instead of being clobbered.
-      val scopeFilter =
-        if (touched.contains(null) && touchedNonNull.nonEmpty)
-          col(partCol).isin(touchedNonNull.toIndexedSeq: _*) || col(partCol).isNull
-        else if (touched.contains(null)) col(partCol).isNull
-        else col(partCol).isin(touchedNonNull.toIndexedSeq: _*)
-      val existingScoped = spark.read.parquet(path).filter(scopeFilter)
-      val merged = dedupLatest(
-        existingScoped.withColumn("graft_src", lit(0))
-          .unionByName(incoming.withColumn("graft_src", lit(1))
-            .select(existingScoped.columns.map(col).toIndexedSeq :+ col("graft_src"): _*)),
-        keys, versionCol, srcCol = Some("graft_src"))
-        .drop("graft_src")
-      val tmp = path.stripSuffix("/") + "__upsert_parts_tmp"
-      merged.write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(tmp)
-      val fs = LakeFs.fs(spark, path)
-      // Swap the partition directories the staged write ACTUALLY
-      // produced (already Hive-escaped), not names recomputed from
-      // values — the two can differ and a miss would drop data.
-      val staged = fs.listStatus(new Path(tmp)).toIndexedSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-        .map(_.getPath)
-      staged.foreach { src =>
-        val dst = new Path(path.stripSuffix("/"), src.getName)
-        val bak = new Path(path.stripSuffix("/"), src.getName + "__upsert_old")
-        val hadOld = fs.exists(dst)
-        if (hadOld && !fs.rename(dst, bak))
-          throw new java.io.IOException(s"partition swap: rename $dst -> $bak failed")
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"partition swap: rename $src -> $dst failed")
-        if (hadOld) fs.delete(bak, true)
+    val merged =
+      if (!LakeFs.isDirectory(spark, path)) dedupLatest(incoming, keys, versionCol)
+      else {
+        val touched = incoming.select(col(partCol)).distinct().collect()
+          .map(_.get(0))
+        val touchedNonNull = touched.filter(_ != null)
+        // Null partition values land in __HIVE_DEFAULT_PARTITION__; scope
+        // the existing-side read to include them iff the batch has them,
+        // so their lake copies join the merge instead of being clobbered.
+        val scopeFilter =
+          if (touched.contains(null) && touchedNonNull.nonEmpty)
+            col(partCol).isin(touchedNonNull.toIndexedSeq: _*) || col(partCol).isNull
+          else if (touched.contains(null)) col(partCol).isNull
+          else col(partCol).isin(touchedNonNull.toIndexedSeq: _*)
+        val existingScoped = spark.read.parquet(path).filter(scopeFilter)
+        dedupLatest(
+          existingScoped.withColumn("graft_src", lit(0))
+            .unionByName(incoming.withColumn("graft_src", lit(1))
+              .select(existingScoped.columns.map(col).toIndexedSeq :+ col("graft_src"): _*)),
+          keys, versionCol, srcCol = Some("graft_src"))
+          .drop("graft_src")
       }
-      fs.delete(new Path(tmp), true)
-    }
+    val tmp = LakeFs.stagePath(path, tag = "upsert_parts")
+    merged.write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(tmp)
+    // Swap the partition directories the staged write ACTUALLY
+    // produced (already Hive-escaped), not names recomputed from
+    // values — the two can differ and a miss would drop data.
+    val fs = LakeFs.fs(spark, path)
+    fs.mkdirs(new Path(path))
+    fs.listStatus(new Path(tmp)).iterator
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+      .foreach(s => LakeFs.swap(spark, new Path(path, s.getPath.getName).toString,
+        s.getPath.toString, tag = "upsert"))
+    fs.delete(new Path(tmp), true)
     spark.read.parquet(path).count()
   }
 

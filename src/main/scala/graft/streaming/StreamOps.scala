@@ -444,11 +444,12 @@ object StreamOps {
     * in flight, after sibling tasks have already written their part
     * files — and demonstrates the sink-side guarantee: the lake path's
     * audit is BYTE-IDENTICAL before and after the failed attempt,
-    * because Upsert.merge materializes into `path__upsert_tmp` and the
-    * lake only ever advances by the post-write atomic swap. Partial
-    * files exist (in the staging dir), but no reader of the lake path
-    * can observe them; the restarted query replays the batch from the
-    * checkpoint (same offsets), the staged Overwrite clears the debris,
+    * because Upsert.merge materializes into `path__upsert_tmp` (its
+    * LakeFs.replace stage) and the lake only ever advances by the
+    * post-write atomic swap. Partial files exist (in the staging dir),
+    * but no reader of the lake path can observe them; the restarted
+    * query replays the batch from the checkpoint (same offsets), the
+    * staged Overwrite clears the debris,
     * and the final audit equals the clean-run expectation with
     * attempt_count 2.
     */

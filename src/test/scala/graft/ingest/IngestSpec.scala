@@ -106,8 +106,8 @@ class IngestSpec extends SparkSpec {
     val lake = Ingest.readLake(spark, conf, "users")
     assert(lake.count() == 1)
     assert(lake.collect().head.getString(1) == "cho")
-    assert(!Files.exists(Paths.get(s"$root/lake/users__stage")))
-    assert(!Files.exists(Paths.get(s"$root/lake/users__old")))
+    assert(!Files.exists(Paths.get(s"$root/lake/users__refresh_tmp")))
+    assert(!Files.exists(Paths.get(s"$root/lake/users__refresh_old")))
   }
 
   test("a failing table quarantines to the error folder without aborting the tick") {
@@ -141,6 +141,8 @@ class IngestSpec extends SparkSpec {
     // batch 1: plain two-column table, one duplicated id
     write(s"$root/upload/metrics/manifest.txt", "id,bigint\nv,double precision")
     write(s"$root/upload/metrics/b1.csv", "id,v\n1,1.5\n1,1.5\n2,2.5\n")
+    // a partial upload beside the batch: never loaded, never archived
+    write(s"$root/upload/metrics/b3.csv.tmp", "id,v\n9,9.5\n")
     val rep1 = Ingest.run(spark, conf)
     assert(rep1.map(_.table) == Seq("metrics"))
     assert(rep1.head.loaded == 2) // dedup kept one of the id=1 rows
@@ -162,5 +164,13 @@ class IngestSpec extends SparkSpec {
     // old rows surface the new column as NULL
     val hosts = lake.select("host").collect().map(r => Option(r.getString(0))).toSeq
     assert(hosts.count(_.isEmpty) == 2 && hosts.flatten == Seq("web01"))
+    assert(Files.exists(Paths.get(s"$root/upload/metrics/b3.csv.tmp")))
+    assert(!Files.exists(Paths.get(s"$root/archive/metrics/b3.csv.tmp")))
+
+    // tick 3: no new file is an idle table, not a failed one
+    val rep3 = Ingest.run(spark, conf)
+    assert(rep3.head.failed.isEmpty && rep3.head.loaded == 0 && rep3.head.files.isEmpty)
+    assert(!Files.exists(Paths.get(s"$root/error")))
+    assert(Ingest.readLake(spark, conf, "metrics").count() == 3)
   }
 }

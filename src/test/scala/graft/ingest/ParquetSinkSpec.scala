@@ -39,7 +39,7 @@ class ParquetSinkSpec extends SparkSpec {
     }
     val before = spark.read.parquet(dir)
     val beforeCount = before.count()
-    assert(ParquetSink.partitionColumns(spark, dir) == Seq("part_year", "part_month"))
+    assert(LakeFs.partitionColumns(spark, dir) == Seq("part_year", "part_month"))
 
     ParquetSink.compact(spark, dir, targetPartitions = 2)
 
@@ -47,7 +47,7 @@ class ParquetSinkSpec extends SparkSpec {
     assert(after.count() == beforeCount)
     // layout survived: partition dirs still exist and Spark still
     // partition-prunes on them
-    assert(ParquetSink.partitionColumns(spark, dir) == Seq("part_year", "part_month"))
+    assert(LakeFs.partitionColumns(spark, dir) == Seq("part_year", "part_month"))
     val pruned = after.filter(col("part_year") === 2024 && col("part_month") === 1)
     val plan = pruned.queryExecution.executedPlan.toString()
     assert(plan.contains("PartitionFilters: ["), s"no partition filters in:\n$plan")

@@ -17,7 +17,7 @@ class ScaleTechniquesSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_lake").toString
     val orders = T.orders(spark, sf())
     ParquetSink.writePartitioned(orders, "o_orderdate", s"$dir/orders")
-    val lake = ParquetSink.readLake(spark, s"$dir/orders")
+    val lake = spark.read.parquet(s"$dir/orders")
     // all rows survive the round trip
     assert(lake.count() == orders.count())
     val pruned = lake.filter(col("part_year") === 1996)
