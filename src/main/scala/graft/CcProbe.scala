@@ -6,9 +6,12 @@ import org.apache.spark.sql.SparkSession
 /** Job-count probe for the starContract round structure (VERDICT r16
   * item: "land a CcProbe stage-count artifact so the claim is
   * checkable"). Runs one declared query (default dedup_cluster) with a
-  * job-counting listener and prints total Spark jobs + wall seconds —
-  * the lazy-checkpoint sig fold (GraphOps.starContract) is visible as
-  * ~(rounds+1) fewer jobs, one per contraction round.
+  * job-counting listener and prints total Spark jobs, the process CPU
+  * seconds and wall seconds of the query. Each local-contraction round
+  * of GraphOps.starContract is ONE job (one shuffle: every edge to both
+  * endpoints' hash partitions; one result stage: the per-partition
+  * contraction, its checkpoint and its changed flag), so jobs and CPU
+  * seconds grow by one round's cost per extra round.
   *
   * Usage: tools/run.sh graft.CcProbe <sfDir> [query_key]
   */
@@ -31,12 +34,15 @@ object CcProbe {
         jobs.incrementAndGet()
     })
     val fn = SparkEntry.queries(name)
-    val t0 = System.nanoTime()
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val (t0, c0) = (System.nanoTime(), os.getProcessCpuTime)
     val n = fn(spark, sfDir).count()
     val sec = (System.nanoTime() - t0) / 1e9
+    val cpu = (os.getProcessCpuTime - c0) / 1e9
     // listener bus is async; give it a moment to drain before reading
     Thread.sleep(500)
-    println(f"ccprobe query=$name rows=$n jobs=${jobs.get()} sec=$sec%.2f")
+    println(f"ccprobe query=$name rows=$n jobs=${jobs.get()} cpu_s=$cpu%.2f sec=$sec%.2f")
     spark.stop()
   }
 }

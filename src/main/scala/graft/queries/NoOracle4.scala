@@ -18,10 +18,12 @@ object NoOracle4 {
     * counts before/after (after must be < 1/4 of before), (2) result
     * equality across the cut, and (3) that post-cut iterations start
     * from the SMALL tree. This is the guard that keeps round-N of any
-    * iterative algorithm (PageRank, star contraction, Lloyd) from
+    * iterative algorithm (PageRank, connected components, Lloyd) from
     * re-optimizing an O(2^N) lineage — dedup_cluster's
-    * `starContract` relies on exactly this; here the effect is
-    * measured as a first-class row.
+    * `starContract` (local contraction, one shuffle per round, exact
+    * fixpoint; Łącki, Mirrokni, Włodarczyk 2018 after Kiveris et al.,
+    * SoCC 2014) checkpoints every round on exactly this; here the
+    * effect is measured as a first-class row.
     */
   val checkpointCut: Q = Q.noOracle("b29_checkpoint_cut") { (s, d) =>
     import s.implicits._

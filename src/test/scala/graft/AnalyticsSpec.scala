@@ -127,6 +127,41 @@ class AnalyticsSpec extends SparkSpec {
     assert(got === expectedIncident)
   }
 
+  test("dedup_cluster edge derivation runs each explode once") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val edges = LlmOpsAnalytics.dedupClusterEdges(spark, sf())
+    edges.collect()
+    val gens = new AdaptiveSparkPlanHelper {}
+      .collect(edges.queryExecution.executedPlan) { case g: GenerateExec => g }
+    // the shingle explode of the corpus and the explode of each doc's
+    // two band keys, one Generate each: a union of b1/b2 branches with a
+    // rep aggregate joined back ran the shingle explode four times
+    assert(gens.length === 2, s"explodes in the executed plan:\n${gens.mkString("\n")}")
+  }
+
+  test("starContract: permuted 3,000-node chain over many input partitions") {
+    import spark.implicits._
+    // a random node order puts each hop on unrelated hash partitions,
+    // and 16 input partitions > 4 shuffle partitions
+    val perm = new scala.util.Random(11).shuffle((0L until 3000L).toVector)
+    val chain = spark.sparkContext
+      .parallelize(perm.sliding(2).map(p => (p(0), p(1))).toSeq, 16).toDF("a", "b")
+    val res = graft.operators.GraphOps.starContract(chain)
+    assert(res.rounds <= 12, s"rounds=${res.rounds}")
+    val labels = res.labels.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(labels.length === 2999 && labels.map(_._1).toSet === (1L until 3000L).toSet)
+    assert(labels.forall(_._2 == 0L), "component minimum is the label")
+  }
+
+  test("starContract: stars already centred on their minima stop after one round") {
+    import spark.implicits._
+    val stars = Seq(0L, 100L, 200L).flatMap(c => (c + 1 to c + 40).map(x => (x, c)))
+    val res = graft.operators.GraphOps.starContract(stars.toDF("a", "b"))
+    assert(res.rounds === 1)
+    assert(res.labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === stars.toSet)
+  }
+
   test("embedding_quantize: q_sum within int8 bounds, saturation present") {
     val rows = LlmOpsAnalytics.embeddingQuantize.fn(spark, sf()).collect()
     assert(rows.length > 0)
