@@ -12,17 +12,23 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object CsvSource {
 
-  /** `unpersist()` releases the internal cache backing both branches.
+  /** Both branches of one read, for callers that need the reject ROWS
+    * (the `b1_*_rejects` queries, [[JsonSource]]). `Ingest` does not use
+    * it: it needs only the reject COUNT, which it observes on its single
+    * read while staging the lake write, then gates before anything
+    * lands — no cache, no separate count.
+    *
+    * `unpersist()` releases the internal cache backing both branches.
     * Call it AFTER both `valid` and `rejects` have been materialized
     * (written / counted): the cache is what guarantees the corrupt
     * marker is populated consistently across the two branches, so
     * unpersisting early reverts to per-branch re-parses. In a
     * long-lived session or bench loop, not calling it leaks one
-    * InMemoryRelation per ingest.
+    * InMemoryRelation per read.
     */
   final case class ReadResult(valid: DataFrame, rejects: DataFrame, unpersist: () => Unit)
 
-  private val CORRUPT = "_graft_corrupt"
+  private[ingest] val CORRUPT = "_graft_corrupt"
 
   /** Read the CSV files (or directories/globs) `paths` with the declared
     * schema in PERMISSIVE mode. Rows that fail to parse land in

@@ -1,9 +1,12 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The reference's batch-ETL loop re-expressed on Spark (SURVEY.md §3.4):
   * discover CSV batches + manifest sidecars, read with reject
@@ -18,9 +21,23 @@ import org.apache.spark.sql.functions._
   * store, not the driver's local disk.
   *
   * Scale posture: each batch is APPENDED as new parquet files — history
-  * is never rewritten. Add-only column evolution composes with parquet
-  * `mergeSchema` on read, so a 100 TB lake absorbs a new column at the
-  * cost of one batch, not a rewrite.
+  * is never rewritten — and costs one pass over its own rows:
+  *   1. stage: one PERMISSIVE read of the batch flows through align and
+  *      dedup into a parquet write to a stage directory
+  *      ([[LakeFs.stagePath]]); the reject and loaded counts are observed
+  *      on that write, not counted by separate jobs;
+  *   2. gate: over the reject limit the stage is deleted and the table
+  *      fails (quarantine) with nothing landed;
+  *   3. land: the stage's files move into the table directory
+  *      ([[LakeFs.stagedAppend]]), or the stage replaces it for a
+  *      full-refresh table ([[LakeFs.replace]]);
+  *   4. record: one commit record per landed batch goes into
+  *      `<table>/_graft_log/` (batch id, the written schema, the files,
+  *      the counts); then the inputs are archived.
+  * Add-only column evolution needs no rewrite: every batch is written
+  * with the evolved schema, so the newest record's schema reads the
+  * whole table ([[readLake]]) and a 100 TB lake absorbs a new column at
+  * the cost of one batch.
   *
   * Layout expected under `uploadDir`:
   *   <table>/<batch>.csv[.gz]       data files (any number, none is fine)
@@ -115,9 +132,83 @@ object Ingest {
     if (!ok) throw new java.io.IOException(s"move $src -> $dst failed")
   }
 
-  /** Lake reader: mergeSchema unions add-only evolved batches. */
-  def readLake(spark: SparkSession, conf: Config, table: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(s"${conf.lakeDir}/$table")
+  /** Lake reader: the table read with its newest commit record's schema,
+    * which every add-only evolved batch extends, so no parquet footer is
+    * read to plan it. A table with no `_graft_log/` — a lake written
+    * before the commit log existed, or rewritten by `compact`/`Upsert`
+    * — is read with parquet `mergeSchema` instead, which unions the
+    * footers of every file.
+    */
+  def readLake(spark: SparkSession, conf: Config, table: String): DataFrame = {
+    val dir = s"${conf.lakeDir}/$table"
+    loggedSchema(spark, dir) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None         => spark.read.option("mergeSchema", "true").parquet(dir)
+    }
+  }
+
+  /** The commit log's directory inside a table; Spark's file index skips
+    * `_`-prefixed paths, so readers never see it as data. */
+  private val LogDir = "_graft_log"
+  /** A record's name: its zero-padded sequence number, so name order is
+    * commit order. */
+  private val RecordName = """(\d{20})\.json""".r
+  private val json = new ObjectMapper()
+
+  /** The newest commit record under the table directory `dir`. */
+  private def newestRecord(fs: FileSystem, dir: String): Option[Path] = {
+    val log = try fs.listStatus(new Path(dir, LogDir))
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    log.map(_.getPath).filter(p => RecordName.matches(p.getName)).maxByOption(_.getName)
+  }
+
+  private def loggedSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val fs = LakeFs.fs(spark, dir)
+    newestRecord(fs, dir).map { p =>
+      val in = fs.open(p)
+      val rec = try json.readTree(in) finally in.close()
+      DataType.fromJson(rec.get("schema").toString).asInstanceOf[StructType]
+    }
+  }
+
+  /** Writes the next commit record of the table directory `dir`, as one
+    * JSON object: `batch_id`, `schema` (Spark's JSON form of the written
+    * schema), `files` (the data files the batch landed), `loaded`,
+    * `rejected`. Created atomically — a hidden temp file renamed
+    * without overwrite — so a reader sees a whole record or none, and an
+    * existing record is never replaced. One writer per table.
+    */
+  private def commit(spark: SparkSession, dir: String, batchId: String, schema: StructType,
+                     files: Seq[String], loaded: Long, rejected: Long): Unit = {
+    val rec = json.createObjectNode()
+    rec.put("batch_id", batchId)
+    rec.set[JsonNode]("schema", json.readTree(schema.json))
+    val names = rec.putArray("files")
+    files.foreach(names.add)
+    rec.put("loaded", loaded).put("rejected", rejected)
+    val fs = LakeFs.fs(spark, dir)
+    val next = newestRecord(fs, dir).fold(0L) { p =>
+      val RecordName(n) = p.getName: @unchecked
+      n.toLong + 1
+    }
+    val log = fs.makeQualified(new Path(dir, LogDir))
+    val name = f"$next%020d.json"
+    val tmp = new Path(log, s".$name.${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(json.writeValueAsBytes(rec)) finally out.close()
+    try FileContext.getFileContext(log.toUri, fs.getConf).rename(tmp, new Path(log, name), Options.Rename.NONE)
+    finally fs.delete(tmp, false)
+  }
+
+  /** A batch's identity: a hash of its sorted input file names and sizes. */
+  private def batchId(fs: FileSystem, files: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.map { f =>
+      val p = new Path(f)
+      s"${p.getName}\t${fs.getFileStatus(p).getLen}\n"
+    }.sorted.foreach(l => md.update(l.getBytes(UTF_8)))
+    md.digest().map(b => f"$b%02x").mkString
+  }
 
   private def loadTable(spark: SparkSession, conf: Config, fs: FileSystem,
                         dir: Path, files: Seq[String]): TableReport = {
@@ -128,8 +219,16 @@ object Ingest {
       finally in.close()
     }
 
-    val res = CsvSource.read(spark, manifest, files: _*)
-    val rejected = CsvSource.enforceRejectLimit(res, conf.rejectLimit)
+    // One read of the batch. The reject count is observed on the raw
+    // PERMISSIVE read, before the corrupt filter, and rides the lake
+    // write like the loaded count below. PERMISSIVE parses only the
+    // columns a plan needs, but the write needs every column, so each row
+    // is parsed whole, once: the reject count and the landed rows come
+    // from the same parse, which is all a cache of the read would buy.
+    val rejectObs = new Observation()
+    val valid = CsvSource.permissive(spark, manifest).option("header", "true").csv(files: _*)
+      .observe(rejectObs, count(col(CsvSource.CORRUPT)).as("n_rejected"))
+      .filter(col(CsvSource.CORRUPT).isNull).drop(CsvSource.CORRUPT)
 
     // Add-only evolution: conform this batch to live-schema ∪ manifest.
     // (Full-refresh tables replace contents, but their schema still only
@@ -139,10 +238,10 @@ object Ingest {
     val (aligned, evolvedCols) =
       if (LakeFs.isDirectory(spark, target)) {
         val live = readLake(spark, conf, table).schema
-        val evolved = SchemaEvolution.evolve(live, res.valid.schema)
+        val evolved = SchemaEvolution.evolve(live, valid.schema)
         val newCols = evolved.fieldNames.diff(live.fieldNames).toSeq
-        (SchemaEvolution.align(res.valid, evolved), newCols)
-      } else (res.valid, Nil)
+        (SchemaEvolution.align(valid, evolved), newCols)
+      } else (valid, Nil)
 
     // Idempotent re-import within the batch: deterministic keep-first
     // dedup when keys are declared (row_number, not dropDuplicates — D4).
@@ -154,24 +253,33 @@ object Ingest {
           .filter(col("_graft_rn") === 1).drop("_graft_rn")
       } else aligned
 
-    // the loaded count rides the lake write as an observed metric —
-    // one job instead of a count pass plus the write (§1.2); the
-    // reject-limit gate above stays a SEPARATE earlier job because it
-    // must throw BEFORE anything lands in the lake.
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = deduped.observe(obs, count(lit(1)).as("n_loaded"))
+    // Stage → gate → land → record. The loaded count rides the write as
+    // an observed metric, like the reject count (§1.2). The write goes to
+    // a stage; the reject gate runs once it has observed the count, and
+    // throws BEFORE anything lands in the lake (the reference's rule),
+    // with the message CsvSource.enforceRejectLimit uses.
+    val loadedObs = new Observation()
+    val observed = deduped.observe(loadedObs, count(lit(1)).as("n_loaded"))
+    def write(stage: String): Unit = observed.write.mode(SaveMode.Overwrite).parquet(stage)
+    lazy val rejected: Long = {
+      val n = rejectObs.get("n_rejected").asInstanceOf[Long]
+      if (n > conf.rejectLimit)
+        throw new IllegalStateException(s"reject limit exceeded: $n > ${conf.rejectLimit}")
+      n
+    }
+    lazy val loaded = loadedObs.get("n_loaded").asInstanceOf[Long]
+    def record(dir: String, landed: Seq[String]): Unit =
+      commit(spark, dir, batchId(fs, files), observed.schema, landed, loaded, rejected)
     // Full refresh is the reference's dimension class: stage-and-swap
-    // (LakeFs.replace), so readers never see a partially-replaced table.
+    // (LakeFs.replace), so readers never see a partially-replaced table;
+    // its record goes into the stage, gated, before the swap.
     if (fullRefresh)
-      LakeFs.replace(spark, target, tag = "refresh")(observed.write.mode(SaveMode.Overwrite).parquet)
-    else observed.write.mode(SaveMode.Append).parquet(target)
-    val loaded = obs.get("n_loaded").asInstanceOf[Long]
-
-    // Both branches of the read are materialized by now (valid via the
-    // write above, rejects via enforceRejectLimit's count) — release
-    // the source cache so a long-running importer doesn't accumulate
-    // one InMemoryRelation per batch.
-    res.unpersist()
+      LakeFs.replace(spark, target, tag = "refresh") { stage =>
+        write(stage)
+        record(stage, LakeFs.dataFiles(spark, stage).map(_.getName))
+      }
+    else
+      record(target, LakeFs.stagedAppend(spark, target, tag = "append")(write)(rejected <= conf.rejectLimit))
 
     // Archive inputs (FS move, driver-side — same as the reference).
     val hconf = spark.sessionState.newHadoopConf()

@@ -5,16 +5,24 @@ import org.apache.spark.sql.SparkSession
 
 /** Lake filesystem operations through `org.apache.hadoop.fs.FileSystem`
   * (resolved per-path from the session's Hadoop conf), NOT
-  * `java.nio.file` — so the stage-and-swap sinks (Upsert, compact,
+  * `java.nio.file` — so the staged sinks (Ingest, Upsert, compact,
   * IncrementalRollup) run unchanged on the stores a 100 TB deployment
   * actually uses: HDFS, S3A, GCS, local file://. `java.nio` only ever
   * worked on the local FS.
+  *
+  * The sinks stage their writes: the writer fills [[stagePath]], a gate
+  * decides, and only then does anything land in the table directory —
+  * by [[replace]] (the stage becomes the table) or [[stagedAppend]]
+  * (the stage's data files move into it). A batch that fails its gate,
+  * or whose writer throws, leaves the table as it was and no stage
+  * behind.
   *
   * Atomicity caveat, by store: HDFS rename is atomic; S3A rename is a
   * non-atomic server-side copy (the swap's "brief no-directory window"
   * widens to the copy duration there — run compactions in a maintenance
   * window, or front the lake with a table format). Local file rename is
-  * atomic within a mount.
+  * atomic within a mount. A staged append moves its files one rename
+  * each, so a crash part-way through it lands part of the batch.
   */
 object LakeFs {
 
@@ -51,13 +59,55 @@ object LakeFs {
   def stagePath(dst: String, tag: String): String = dst.stripSuffix("/") + s"__${tag}_tmp"
 
   /** Stage-and-swap: `write` fills [[stagePath]], which then replaces
-    * `dst` (see [[swap]]).
+    * `dst` (see [[swap]]). A `write` that throws leaves `dst` as it was
+    * and the stage deleted.
     */
   def replace(spark: SparkSession, dst: String, tag: String)(write: String => Unit): Unit = {
     val tmp = stagePath(dst, tag)
-    write(tmp)
-    swap(spark, dst, tmp, tag)
+    try {
+      write(tmp)
+      swap(spark, dst, tmp, tag)
+    } finally fs(spark, tmp).delete(new Path(tmp), true)
   }
+
+  /** Staged append into a flat (unpartitioned) directory: `write` fills
+    * [[stagePath]]; if `keep` then holds, the stage's data files move
+    * into `dst` (created if absent). Returns the names that landed —
+    * none when `keep` is false. The stage is deleted in every case, also
+    * when `write` or `keep` throws, so a gate that throws lands nothing.
+    * Spark names every file it writes with a fresh UUID, so a move never
+    * meets an existing name.
+    */
+  def stagedAppend(spark: SparkSession, dst: String, tag: String)(write: String => Unit)(
+      keep: => Boolean): Seq[String] = {
+    val tmp = new Path(stagePath(dst, tag))
+    val f = fs(spark, dst)
+    try {
+      write(tmp.toString)
+      if (!keep) Nil
+      else {
+        val dstP = new Path(dst)
+        f.mkdirs(dstP)
+        dataFiles(spark, tmp.toString).map { src =>
+          // on a checksummed store (the local FS) rename moves the .crc too
+          if (!f.rename(src, new Path(dstP, src.getName)))
+            throw new java.io.IOException(s"stagedAppend: move $src -> $dstP failed")
+          src.getName
+        }
+      }
+    } finally f.delete(tmp, true)
+  }
+
+  /** The data files directly under `dir`: every file whose name starts
+    * with neither `_` nor `.` (Spark's own rule for what a reader sees).
+    */
+  def dataFiles(spark: SparkSession, dir: String): Seq[Path] =
+    fs(spark, dir).listStatus(new Path(dir)).iterator
+      .filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .map(_.getPath).toSeq.sortBy(_.getName)
 
   /** `dst` → `<dst>__<tag>_old` → deleted, `tmp` → `dst`; a single
     * rename when `dst` does not exist yet. Each rename is atomic on

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ingest.LakeFs
 
 /** Incremental rollup maintenance — the standard 100 TB pattern for
   * keeping a day-grain aggregate current without recomputing history:
@@ -9,6 +10,12 @@ import org.apache.spark.sql.functions._
   * aggregated and appended. Works because day-grain groups never span
   * partitions (the lake is partitioned by the same day key the rollup
   * groups on).
+  *
+  * One pass per update: the delta is aggregated once, by the write that
+  * stages it ([[LakeFs.stagedAppend]]), which also observes its row
+  * count; an empty delta lands nothing. The rollup's schema is the
+  * aggregation's, known from analysis alone, so the existing rollup and
+  * the returned frame are read with it and no footer is inferred.
   *
   * Generalizes the reference's "periodic batch rollups of monitoring
   * samples" to a restatement-free incremental form. Assumes day-closed
@@ -20,21 +27,26 @@ object IncrementalRollup {
 
   /** Aggregate `fact` (filtered to days > high-water mark) by day +
     * `keys`, append to the rollup at `rollupPath`, and return the
-    * updated rollup frame. `aggs` must be day-local (sum/count/min/max —
-    * anything distributive).
+    * updated rollup frame — empty, with the rollup's schema, while no
+    * row has been rolled (no directory is created for an empty delta).
+    * `aggs` must be day-local (sum/count/min/max — anything
+    * distributive).
     */
   def update(spark: SparkSession, fact: DataFrame, tsCol: String,
              keys: Seq[String], aggs: Map[String, String],
              rollupPath: String): DataFrame = {
-    val dayCol = to_date(col(tsCol)).as("day")
-    val existing: Option[DataFrame] =
-      if (graft.ingest.LakeFs.isDirectory(spark, rollupPath))
-        Some(spark.read.parquet(rollupPath))
+    def rollup(df: DataFrame): DataFrame = df
+      .groupBy((to_date(col(tsCol)).as("day") +: keys.map(col)): _*)
+      .agg(aggs.head match { case (c, f) => expr(s"$f($c)").as(s"${f}_$c") },
+        aggs.tail.map { case (c, f) => expr(s"$f($c)").as(s"${f}_$c") }.toSeq: _*)
+    val schema = rollup(fact).schema
+    def existing(): Option[DataFrame] =
+      if (LakeFs.isDirectory(spark, rollupPath)) Some(spark.read.schema(schema).parquet(rollupPath))
       else None
 
     // high-water mark joined into the plan as a broadcast scalar — no
     // driver-side action; NULL hw (empty rollup) keeps every row
-    val fresh = existing match {
+    val fresh = existing() match {
       case Some(roll) =>
         val hw = roll.agg(max(col("day")).as("graft_hw"))
         fact.crossJoin(broadcast(hw))
@@ -43,15 +55,10 @@ object IncrementalRollup {
       case None => fact
     }
 
-    val delta = fresh
-      .groupBy((dayCol +: keys.map(col)): _*)
-      .agg(aggs.head match { case (c, f) => expr(s"$f($c)").as(s"${f}_$c") },
-        aggs.tail.map { case (c, f) => expr(s"$f($c)").as(s"${f}_$c") }.toSeq: _*)
-
-    if (delta.isEmpty && existing.isDefined) existing.get
-    else {
-      delta.write.mode(SaveMode.Append).parquet(rollupPath)
-      spark.read.parquet(rollupPath)
-    }
+    val rows = new Observation()
+    val delta = rollup(fresh).observe(rows, count(lit(1)).as("n"))
+    LakeFs.stagedAppend(spark, rollupPath, tag = "rollup")(delta.write.mode(SaveMode.Overwrite).parquet)(
+      rows.get("n").asInstanceOf[Long] > 0)
+    existing().getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
   }
 }

@@ -1,6 +1,8 @@
 package graft.ingest
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkSpec
 
 /** B1 (CSV + rejects) and the §3.4 pipeline end-to-end on temp dirs. */
@@ -10,6 +12,42 @@ class IngestSpec extends SparkSpec {
     val p = Paths.get(path)
     Files.createDirectories(p.getParent)
     Files.writeString(p, content)
+  }
+
+  /** Every path under `dir`, relative to it, sorted. */
+  private def tree(dir: String): Seq[String] = {
+    val root = Paths.get(dir)
+    val s = Files.walk(root)
+    try s.iterator().asScala.map(p => root.relativize(p).toString).toSeq.sorted finally s.close()
+  }
+
+  /** The Spark jobs `body` runs, counted by a listener that sees only
+    * jobs submitted under a local-property tag. A fence job submitted
+    * after `body` is awaited, so every job of `body` has been delivered
+    * (one listener queue is FIFO).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(key, "body")
+      body
+      sc.setLocalProperty(key, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("fence"), "listener never saw the fence job")
+      seen.asScala.count(_ == "body")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
   }
 
   test("CsvSource splits valid rows from rejects") {
@@ -110,6 +148,55 @@ class IngestSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$root/lake/users__refresh_old")))
   }
 
+  test("an over-limit batch on an existing table lands nothing: append and full refresh") {
+    val root = Files.createTempDirectory("graft_overlimit").toString
+    val conf = Ingest.Config(
+      uploadDir = s"$root/upload", lakeDir = s"$root/lake",
+      archiveDir = s"$root/archive", errorDir = s"$root/error",
+      rejectLimit = 1, fullRefreshTables = Set("dims"))
+    for (t <- Seq("facts", "dims")) {
+      write(s"$root/upload/$t/manifest.txt", "id,bigint\nv,double precision")
+      write(s"$root/upload/$t/b1.csv", "id,v\n1,1.5\n2,2.5\n")
+    }
+    assert(Ingest.run(spark, conf).forall(r => r.failed.isEmpty && r.loaded == 2))
+    def rows(t: String) = Ingest.readLake(spark, conf, t).orderBy("id").collect().toSeq
+    val before = Seq("facts", "dims").map(t => (rows(t), tree(s"$root/lake/$t")))
+
+    // two rejects against a limit of one; the valid row must not land
+    for (t <- Seq("facts", "dims"))
+      write(s"$root/upload/$t/b2.csv", "id,v\n3,3.5\n4,bad\n5,worse\n")
+    val reports = Ingest.run(spark, conf)
+    assert(reports.map(_.failed) == Seq.fill(2)(Some("reject limit exceeded: 2 > 1")))
+    assert(Seq("facts", "dims").map(t => (rows(t), tree(s"$root/lake/$t"))) == before)
+    assert(tree(s"$root/lake").filter(_.matches(".*__.*_tmp.*")).isEmpty)
+    for (t <- Seq("facts", "dims")) {
+      assert(Files.exists(Paths.get(s"$root/error/$t/b2.csv")))
+      assert(!Files.exists(Paths.get(s"$root/upload/$t/b2.csv")))
+    }
+  }
+
+  test("Ingest.run of a small batch into an existing deduped table runs at most 2 Spark jobs") {
+    val root = Files.createTempDirectory("graft_jobs").toString
+    val conf = Ingest.Config(
+      uploadDir = s"$root/upload", lakeDir = s"$root/lake",
+      archiveDir = s"$root/archive", dedupKeys = Seq("id"))
+    write(s"$root/upload/m/manifest.txt", "id,bigint\nv,double precision")
+    write(s"$root/upload/m/b1.csv", "id,v\n1,1.5\n2,2.5\n")
+    Ingest.run(spark, conf)
+    write(s"$root/upload/m/b2.csv", "id,v\n3,3.5\n3,3.5\n4,oops\n")
+    var rep: Seq[Ingest.TableReport] = Nil
+    // the batch parse, reject gate, schema probe, dedup and write share
+    // one pass: the dedup shuffle's map stage and the write
+    val jobs = jobsOf { rep = Ingest.run(spark, conf) }
+    assert(rep.map(r => (r.loaded, r.rejected, r.failed)) == Seq((1L, 1L, None)))
+    assert(jobs <= 2, s"$jobs jobs")
+    // a batch of rejects only, within the limit: its counts are still
+    // observed although no row reaches the write
+    write(s"$root/upload/m/b3.csv", "id,v\nx,y\n")
+    assert(Ingest.run(spark, conf).map(r => (r.loaded, r.rejected, r.failed)) == Seq((0L, 1L, None)))
+    assert(Ingest.readLake(spark, conf, "m").count() == 3)
+  }
+
   test("a failing table quarantines to the error folder without aborting the tick") {
     val root = Files.createTempDirectory("graft_err").toString
     val conf = Ingest.Config(
@@ -160,6 +247,12 @@ class IngestSpec extends SparkSpec {
 
     val lake = Ingest.readLake(spark, conf, "metrics")
     assert(lake.count() == 3)
+    // the commit record's schema reads what parquet mergeSchema reads
+    val merged = spark.read.option("mergeSchema", "true").parquet(s"$root/lake/metrics")
+    assert(lake.schema.map(f => (f.name, f.dataType)) == merged.schema.map(f => (f.name, f.dataType)))
+    assert(lake.orderBy("id").collect().toSeq == merged.orderBy("id").collect().toSeq)
+    assert(tree(s"$root/lake/metrics/_graft_log").filter(_.endsWith(".json")) ==
+      Seq("00000000000000000000.json", "00000000000000000001.json"))
     assert(lake.columns.sorted.toSeq == Seq("host", "id", "v"))
     // old rows surface the new column as NULL
     val hosts = lake.select("host").collect().map(r => Option(r.getString(0))).toSeq

@@ -28,9 +28,28 @@ class IncrementalRollupSpec extends SparkSpec {
       .except(full.select("day", "o_orderstatus", "sum_o_totalprice"))
     assert(diff.isEmpty, s"incremental != full recompute: ${diff.take(3).toSeq}")
 
-    // idempotent: another tick with no new days changes nothing
+    // idempotent: another tick with no new days changes nothing, not
+    // even the rollup's file list
+    def files() = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(path)))(
+      _.toArray.map(_.toString).sorted.toSeq)
+    val before = files()
     val again = IncrementalRollup.update(spark, orders, "o_orderdate",
       Seq("o_orderstatus"), Map("o_totalprice" -> "sum"), path)
     assert(again.count() == full.count())
+    assert(files() == before)
+  }
+
+  test("an empty fact and no rollup: an empty frame of the rollup's schema, no directory") {
+    val path = Files.createTempDirectory("graft_rollup_empty").toString + "/daily"
+    val orders = T.orders(spark, sf())
+    // empty at run time, and empty already in the optimized plan
+    for (none <- Seq(orders.filter(col("o_orderkey") < 0), orders.filter(lit(false)))) {
+      val r = IncrementalRollup.update(spark, none, "o_orderdate",
+        Seq("o_orderstatus"), Map("o_totalprice" -> "sum"), path)
+      assert(r.columns.toSeq == Seq("day", "o_orderstatus", "sum_o_totalprice"))
+      assert(r.isEmpty)
+      assert(!Files.exists(java.nio.file.Paths.get(path)))
+      assert(!Files.exists(java.nio.file.Paths.get(path + "__rollup_tmp")))
+    }
   }
 }
