@@ -3,7 +3,7 @@ package graft.ingest
 import java.nio.charset.StandardCharsets.UTF_8
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -260,7 +260,7 @@ object Ingest {
     // with the message CsvSource.enforceRejectLimit uses.
     val loadedObs = new Observation()
     val observed = deduped.observe(loadedObs, count(lit(1)).as("n_loaded"))
-    def write(stage: String): Unit = observed.write.mode(SaveMode.Overwrite).parquet(stage)
+    def write(stage: String): Unit = LakeFs.writeParquet(observed, stage)
     lazy val rejected: Long = {
       val n = rejectObs.get("n_rejected").asInstanceOf[Long]
       if (n > conf.rejectLimit)

@@ -1,7 +1,7 @@
 package graft.ingest
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Lake filesystem operations through `org.apache.hadoop.fs.FileSystem`
   * (resolved per-path from the session's Hadoop conf), NOT
@@ -16,6 +16,14 @@ import org.apache.spark.sql.SparkSession
   * (the stage's data files move into it). A batch that fails its gate,
   * or whose writer throws, leaves the table as it was and no stage
   * behind.
+  *
+  * The lake's file format is parquet with zstd column chunks, and
+  * [[writeParquet]] is the one call that writes it: the ingest stage,
+  * the rollup delta, `ParquetSink` and `Upsert` all go through it, so
+  * the format is stated once and no session conf can change it. Parquet
+  * records the codec per column chunk, so readers need nothing: a lake
+  * whose older files are snappy (written before zstd) reads as one
+  * table, and `ParquetSink.compact` rewrites such files as zstd.
   *
   * Atomicity caveat, by store: HDFS rename is atomic; S3A rename is a
   * non-atomic server-side copy (the swap's "brief no-directory window"
@@ -54,6 +62,15 @@ object LakeFs {
     }
     loop(new Path(path), Vector.empty)
   }
+
+  /** Writes `df` to `dir` as the lake's parquet files (zstd), in Hive
+    * layout by `partitionBy` when given. The `compression` option takes
+    * precedence over `spark.sql.parquet.compression.codec`, so the codec
+    * does not depend on the session's conf.
+    */
+  def writeParquet(df: DataFrame, dir: String, partitionBy: Seq[String] = Nil,
+                   mode: SaveMode = SaveMode.Overwrite): Unit =
+    df.write.partitionBy(partitionBy: _*).mode(mode).option("compression", "zstd").parquet(dir)
 
   /** Where a stage-and-swap of `dst` writes before [[swap]]. */
   def stagePath(dst: String, tag: String): String = dst.stripSuffix("/") + s"__${tag}_tmp"

@@ -17,13 +17,11 @@ object ParquetSink {
     */
   def writePartitioned(df: DataFrame, tsCol: String, path: String,
                        mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.withColumn("part_year", year(col(tsCol)))
-      .withColumn("part_month", month(col(tsCol)))
-      .sortWithinPartitions(col("part_year"), col("part_month"), col(tsCol))
-      .write
-      .partitionBy("part_year", "part_month")
-      .mode(mode)
-      .parquet(path)
+    LakeFs.writeParquet(
+      df.withColumn("part_year", year(col(tsCol)))
+        .withColumn("part_month", month(col(tsCol)))
+        .sortWithinPartitions(col("part_year"), col("part_month"), col(tsCol)),
+      path, partitionBy = Seq("part_year", "part_month"), mode = mode)
 
   /** Compact a lake directory in place: rewrite to ~`targetPartitions`
     * files per write, PRESERVING the lake's partition layout (a flat
@@ -33,6 +31,13 @@ object ParquetSink {
     * small-file problem costs more than the data — scan tasks, NameNode
     * pressure, footer reads all scale with file count, not bytes.
     *
+    * The read merges every file's footer schema (`mergeSchema`): a plain
+    * parquet read takes the schema of one file, so on a lake that gained
+    * a column by add-only evolution the rewrite would keep or drop that
+    * column depending on which file was listed first. The rewrite goes
+    * through [[LakeFs.writeParquet]], so it also converts older files to
+    * the lake's current codec.
+    *
     * The swap is two Hadoop-FS renames (old→bak, tmp→dst): atomic each
     * on HDFS/local (non-atomic copy on S3A — see LakeFs), with a brief
     * window with no directory at `path`; readers racing a compaction
@@ -40,11 +45,10 @@ object ParquetSink {
     */
   def compact(spark: SparkSession, path: String, targetPartitions: Int): Unit = {
     val partCols = LakeFs.partitionColumns(spark, path)
-    val df = spark.read.parquet(path)
-    val writer =
-      if (partCols.isEmpty) df.repartition(targetPartitions).write
+    val df = spark.read.option("mergeSchema", "true").parquet(path)
+    val rewritten =
+      if (partCols.isEmpty) df.repartition(targetPartitions)
       else df.repartition(targetPartitions, partCols.map(col): _*)
-        .write.partitionBy(partCols: _*)
-    LakeFs.replace(spark, path, tag = "compact")(writer.mode(SaveMode.Overwrite).parquet)
+    LakeFs.replace(spark, path, tag = "compact")(LakeFs.writeParquet(rewritten, _, partitionBy = partCols))
   }
 }

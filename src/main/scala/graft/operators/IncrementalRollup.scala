@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ingest.LakeFs
 
@@ -57,7 +57,7 @@ object IncrementalRollup {
 
     val rows = new Observation()
     val delta = rollup(fresh).observe(rows, count(lit(1)).as("n"))
-    LakeFs.stagedAppend(spark, rollupPath, tag = "rollup")(delta.write.mode(SaveMode.Overwrite).parquet)(
+    LakeFs.stagedAppend(spark, rollupPath, tag = "rollup")(LakeFs.writeParquet(delta, _))(
       rows.get("n").asInstanceOf[Long] > 0)
     existing().getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
   }

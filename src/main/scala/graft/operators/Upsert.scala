@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ingest.LakeFs
@@ -47,7 +47,7 @@ object Upsert {
         dedupLatest(all, keys, versionCol, srcCol = Some("graft_src"))
           .drop("graft_src")
       }
-    LakeFs.replace(spark, path, tag = "upsert")(merged.write.mode(SaveMode.Overwrite).parquet)
+    LakeFs.replace(spark, path, tag = "upsert")(LakeFs.writeParquet(merged, _))
   }
 
   /** Partition-scoped MERGE into a Hive-layout lake partitioned by
@@ -100,7 +100,7 @@ object Upsert {
           .drop("graft_src")
       }
     val tmp = LakeFs.stagePath(path, tag = "upsert_parts")
-    merged.write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(tmp)
+    LakeFs.writeParquet(merged, tmp, partitionBy = Seq(partCol))
     // Swap the partition directories the staged write ACTUALLY
     // produced (already Hive-escaped), not names recomputed from
     // values — the two can differ and a miss would drop data.

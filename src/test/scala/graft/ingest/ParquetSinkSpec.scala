@@ -1,11 +1,43 @@
 package graft.ingest
 
-import java.nio.file.Files
-import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions.col
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.{col, sum, to_date, to_timestamp}
 import graft.{SparkSpec, Tables => T}
+import graft.operators.{IncrementalRollup, Upsert}
 
 class ParquetSinkSpec extends SparkSpec {
+
+  private def write(path: String, content: String): Unit = {
+    val p = Paths.get(path)
+    Files.createDirectories(p.getParent)
+    Files.writeString(p, content)
+  }
+
+  /** The footer codecs of every parquet data file under `dir`, by file. */
+  private def codecs(dir: String): Map[String, Set[String]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val s = Files.walk(Paths.get(dir))
+    val files = try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
+      finally s.close()
+    files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val cs = try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+        finally r.close()
+      f -> cs
+    }.toMap
+  }
+
+  /** A day's generated batch: six rows over two hosts, sums exact in binary. */
+  private def dayRows(day: Int): Seq[(Long, String, String, Double)] =
+    (1 to 6).map(i => (day * 10L + i, f"2024-01-$day%02d 0$i:00:00", s"h${i % 2}", i * 0.25))
+  private val dayManifest = "id,bigint\nts,timestamp without time zone\nhost,text\nv,double precision"
+  private def dayCsv(day: Int): String =
+    ("id,ts,host,v" +: dayRows(day).map(_.productIterator.mkString(","))).mkString("", "\n", "\n")
 
   test("compact rewrites a many-file lake to few files, preserving rows") {
     val dir = Files.createTempDirectory("graft_compact").toString + "/t"
@@ -57,5 +89,104 @@ class ParquetSinkSpec extends SparkSpec {
     ParquetSink.writePartitioned(
       events.limit(10).repartition(1), "ts", dir, SaveMode.Append)
     assert(spark.read.parquet(dir).count() == beforeCount + 10)
+  }
+
+  test("compact merges the file schemas: (id, a) + (id, b) compacts to (id, a, b)") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_compact_merge").toString + "/t"
+    Seq((1L, "x")).toDF("id", "a").write.parquet(dir)
+    Seq((2L, "y")).toDF("id", "b").write.mode(SaveMode.Append).parquet(dir)
+
+    ParquetSink.compact(spark, dir, targetPartitions = 1)
+
+    val after = spark.read.parquet(dir)
+    assert(after.columns.sorted.toSeq == Seq("a", "b", "id"))
+    val rows = after.select("id", "a", "b").orderBy("id").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)), Option(r.getString(2)))).toSeq
+    assert(rows == Seq((1L, Some("x"), None), (2L, None, Some("y"))))
+  }
+
+  test("compact of a lake evolved by two Ingest ticks keeps every column and row") {
+    val root = Files.createTempDirectory("graft_compact_evolved").toString
+    val conf = Ingest.Config(
+      uploadDir = s"$root/upload", lakeDir = s"$root/lake", archiveDir = s"$root/archive")
+    write(s"$root/upload/m/manifest.txt", "id,bigint\nv,double precision")
+    write(s"$root/upload/m/b1.csv", "id,v\n1,1.5\n2,2.5\n")
+    Ingest.run(spark, conf)
+    write(s"$root/upload/m/manifest.txt", "id,bigint\nv,double precision\nhost,text")
+    write(s"$root/upload/m/b2.csv", "id,v,host\n3,3.5,web01\n")
+    assert(Ingest.run(spark, conf).head.evolvedColumns == Seq("host"))
+    // the read before compaction, held in memory: compaction deletes its files
+    val lake = Ingest.readLake(spark, conf, "m")
+    val before = spark.createDataFrame(lake.collect().toList.asJava, lake.schema)
+
+    ParquetSink.compact(spark, s"$root/lake/m", targetPartitions = 1)
+
+    val after = Ingest.readLake(spark, conf, "m")
+    assert(after.columns.sorted.toSeq == Seq("host", "id", "v"))
+    assert(LoadAudit.verified(before, after))
+  }
+
+  test("every lake writer lands zstd files, whatever the session's parquet codec") {
+    import spark.implicits._
+    val key = "spark.sql.parquet.compression.codec"
+    val prior = spark.conf.getOption(key)
+    for (codec <- Seq(None, Some("snappy"))) try {
+      codec.foreach(spark.conf.set(key, _))
+      val root = Files.createTempDirectory("graft_codec").toString
+      val conf = Ingest.Config(
+        uploadDir = s"$root/upload", lakeDir = s"$root/lake",
+        archiveDir = s"$root/archive", fullRefreshTables = Set("dims"))
+      for (day <- 1 to 2) {
+        for (t <- Seq("facts", "dims")) {
+          write(s"$root/upload/$t/manifest.txt", dayManifest)
+          write(s"$root/upload/$t/b$day.csv", dayCsv(day))
+        }
+        assert(Ingest.run(spark, conf).map(r => (r.loaded, r.failed)) == Seq.fill(2)((6L, None)))
+      }
+      IncrementalRollup.update(spark, Ingest.readLake(spark, conf, "facts"), "ts",
+        Seq("host"), Map("v" -> "sum"), s"$root/rollup")
+
+      val frame = Seq((1L, "2024-01-01 00:00:00", 1, 1), (2L, "2024-02-01 00:00:00", 2, 1))
+        .toDF("id", "ts", "day", "version").withColumn("ts", to_timestamp(col("ts")))
+      ParquetSink.writePartitioned(frame, "ts", s"$root/partitioned")
+      frame.write.option("compression", "snappy").parquet(s"$root/compacted")
+      ParquetSink.compact(spark, s"$root/compacted", targetPartitions = 1)
+      Upsert.merge(spark, s"$root/merged", frame, Seq("id"), "version")
+      Upsert.merge(spark, s"$root/merged", frame, Seq("id"), "version")
+      Upsert.intoPartitionedParquet(spark, s"$root/parts", frame, Seq("id"), "version", "day")
+      Upsert.intoPartitionedParquet(spark, s"$root/parts", frame, Seq("id"), "version", "day")
+
+      for (w <- Seq("lake/facts", "lake/dims", "rollup", "partitioned", "compacted", "merged", "parts")) {
+        val byFile = codecs(s"$root/$w")
+        assert(byFile.nonEmpty && byFile.values.forall(_ == Set("ZSTD")), s"$w with $key=$codec: $byFile")
+      }
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("a lake of older snappy files takes an Ingest append and a rollup update") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_mixed_codec").toString
+    val conf = Ingest.Config(
+      uploadDir = s"$root/upload", lakeDir = s"$root/lake", archiveDir = s"$root/archive")
+    def frame(rs: Seq[(Long, String, String, Double)]): DataFrame =
+      rs.toDF("id", "ts", "host", "v").withColumn("ts", to_timestamp(col("ts")))
+    def rollup(df: DataFrame): DataFrame =
+      df.groupBy(to_date(col("ts")).as("day"), col("host")).agg(sum(col("v")).as("sum_v"))
+    // day 1 was landed before the lake's files were zstd
+    frame(dayRows(1)).write.option("compression", "snappy").parquet(s"$root/lake/cpu")
+    rollup(frame(dayRows(1))).write.option("compression", "snappy").parquet(s"$root/rollup")
+
+    write(s"$root/upload/cpu/manifest.txt", dayManifest)
+    write(s"$root/upload/cpu/b2.csv", dayCsv(2))
+    assert(Ingest.run(spark, conf).map(r => (r.loaded, r.failed)) == Seq((6L, None)))
+    val updated = IncrementalRollup.update(spark, Ingest.readLake(spark, conf, "cpu"), "ts",
+      Seq("host"), Map("v" -> "sum"), s"$root/rollup")
+
+    for (d <- Seq("lake/cpu", "rollup"))
+      assert(codecs(s"$root/$d").values.toSet == Set(Set("SNAPPY"), Set("ZSTD")), d)
+    val all = frame(dayRows(1) ++ dayRows(2))
+    assert(LoadAudit.verified(all, Ingest.readLake(spark, conf, "cpu")))
+    assert(LoadAudit.verified(rollup(all), updated))
   }
 }
