@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Shared table loaders + determinism helpers (SURVEY.md §2 D-rules).
   *
@@ -11,9 +12,56 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Load a testdata table: `$sfDir/<name>.parquet`. */
-  def tbl(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Load a testdata table: `$sfDir/<name>.parquet`.
+    *
+    * Inferring a parquet schema is a one-task Spark job that reads a
+    * footer, and the same tables are read again and again in one
+    * session, so each inferred schema is reused through
+    * `spark.read.schema(…)`. The memo keys on the session (weakly), the
+    * path, the listing of the path's files (name, length, mtime) and
+    * the session's SQL conf: a rewritten directory or a changed conf
+    * (`nanosAsLong`, `inferTimestampNTZ`, …) infers afresh.
+    */
+  def tbl(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    listing(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val key = (path, files, spark.sessionState.conf.getAllConfs)
+        val memo = schemaMemo.synchronized {
+          schemaMemo.computeIfAbsent(spark,
+            _ => new java.util.concurrent.ConcurrentHashMap[AnyRef, StructType]())
+        }
+        memo.get(key) match {
+          case null =>
+            val df = spark.read.parquet(path)
+            if (memo.size >= MemoEntriesPerSession) memo.clear()
+            memo.put(key, df.schema)
+            df
+          case schema => spark.read.schema(schema).parquet(path)
+        }
+    }
+  }
+
+  private val schemaMemo = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[AnyRef, StructType]]()
+  // a session that keeps changing its conf would otherwise grow the memo
+  // without bound; starting over costs one inference per table
+  private val MemoEntriesPerSession = 256
+
+  /** Every file under `path` as (name, length, mtime), sorted; None when
+    * the path cannot be listed (the plain read then reports why). */
+  private def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val b = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(b.result().sorted)
+    } catch { case _: java.io.IOException => None }
 
   def region(s: SparkSession, d: String): DataFrame   = tbl(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = tbl(s, d, "nation")

@@ -140,7 +140,6 @@ object AnnIvfPq {
     val kRow = e.agg(least(ceil(sqrt(count(lit(1)))), lit(256)).cast("long").as("k"))
     val cent = e.crossJoin(broadcast(kRow)).filter(col("vec_id") < col("k"))
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
-    val assign = LlmOpsAnn.argmaxAssign(e, cent)
     val resid = expr(
       "zip_with(embedding, c_emb, (x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE))")
     val subExplode = explode(expr(
@@ -151,7 +150,10 @@ object AnnIvfPq {
     // frame cost more than the recomputed lineage it saved at every
     // tested size; the win that stuck is dropping enc's assign re-join
     // below.)
-    val subs = e.join(assign, "vec_id")
+    // few-file straggler guard (Tables.spreadExplodeInput) on the
+    // assignment input: the assignment adds no shuffle of its own, so
+    // the ×M subvector explode would otherwise run in the scan's splits
+    val subs = LlmOpsAnn.argmaxAssign(T.spreadExplodeInput(s, e), cent)
       .join(broadcast(cent), "cent_id")
       .withColumn("rv", resid)
       .select(col("vec_id"), col("cent_id"), subExplode)

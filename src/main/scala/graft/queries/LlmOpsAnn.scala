@@ -259,31 +259,72 @@ object LlmOpsAnn {
       .orderBy(col("hamming").asc_nulls_first)
   }
 
-  /** Exact nearest-centroid assignment WITHOUT a sort. The obvious
-    * one-pass `max_by(cent_id, struct(cos, -cent_id))` puts a struct in
-    * the aggregation buffer, which is not UnsafeRow-mutable — Spark
+  /** Exact nearest-centroid assignment as one narrow projection: `e`'s
+    * rows with the `cent_id` of the centroid (`cent`: cent_id, c_emb)
+    * of greatest cosine to `embedding`, ties to the smallest cent_id —
+    * the (cos DESC, cent_id ASC) order the oracle's row_number uses.
+    *
+    * The centroid set is collected once into one row (cent_id, c_emb,
+    * ‖c_emb‖), a scalar subquery shipped to every task, and each vector
+    * folds over it ([[nearestCent]] over per-centroid dot products), so
+    * the vector side never shuffles and never joins: only the centroid
+    * collect does. The cosine is cosCol's arithmetic, `dot / (‖e‖·‖c‖)`,
+    * and the comparisons are Spark's (NaN greatest, NaN = NaN,
+    * 0.0 = -0.0). A zero norm raises DIVIDE_BY_ZERO under ANSI; without
+    * it that cosine is NULL and never chosen, and a vector with no
+    * non-NULL cosine (or an empty centroid set) yields no row.
+    *
+    * Not `max_by(cent_id, struct(cos, -cent_id))` over crossed rows: a
+    * struct in the aggregation buffer is not UnsafeRow-mutable, so Spark
     * silently falls back to SortAggregate and SORTS all n·k crossed
     * rows, each carrying two 64-float arrays (the sf10 sweep measured
     * the assignment at minutes, sort-dominated, vs seconds of actual
-    * flops). Two codegen HashAggregate passes instead: (1) max(cos) per
-    * vector; (2) re-cross, keep rows whose cos is bit-identical to the
-    * max (same expression on the same inputs ⇒ exact match; Spark
-    * defines NaN = NaN as true, so zero-norm vectors still assign), and
-    * take min(cent_id) — the same (cos DESC, cent_id ASC) tie-break the
-    * oracle's row_number uses. Only n-row (vec_id, double/long) frames
-    * ever shuffle; the n·k pass stays inside whole-stage codegen.
+    * flops). Nor a filter on the computed cent_id: Catalyst pushes it
+    * below the projection and the fold runs twice per row. The
+    * unassigned rows are dropped by a cheap test on the inputs instead:
+    * some cosine is non-NULL exactly when some centroid has an
+    * embedding and passes the fold's own divisor (the same Divide, so
+    * the same ANSI error or NULL).
     */
-  private[queries] def argmaxAssign(e: DataFrame, cent: DataFrame): DataFrame = {
-    val v = e.select(col("vec_id"), col("embedding"))
-    val cosAssign = cosCol("embedding", "c_emb")
-    val best = v.crossJoin(broadcast(cent))
-      .groupBy(col("vec_id"))
-      .agg(max(cosAssign).as("best_cos"))
-    v.join(best, "vec_id")
-      .crossJoin(broadcast(cent))
-      .filter(cosAssign === col("best_cos"))
-      .groupBy(col("vec_id"))
-      .agg(min(col("cent_id")).as("cent_id"))
+  private[graft] def argmaxAssign(e: DataFrame, cent: DataFrame): DataFrame = {
+    import graft.functions.VectorOps
+    val cents = cent.agg(collect_list(struct(col("cent_id"), col("c_emb"),
+      sqrt(VectorOps.ssq(col("c_emb"))).as("c_norm")))).scalar()
+    val vNorm = sqrt(VectorOps.ssq(col("embedding")))
+    val assignable = exists(col("_cents"), c =>
+      c("c_emb").isNotNull && (lit(1.0) / (vNorm * c("c_norm"))).isNotNull)
+    val scored = transform(col("_cents"), c => struct(c("cent_id").as("cent_id"),
+      VectorOps.dot(col("embedding"), c("c_emb")).as("dp"), c("c_norm").as("c_norm")))
+    val centIdType = cent.schema("cent_id").dataType
+    // `assignable` keeps only rows whose fold is non-NULL, so the coalesce
+    // never applies: it makes cent_id non-nullable, which stops Catalyst
+    // from inferring isnotnull(cent_id) for a later join on it and
+    // running the fold a second time in the scan filter
+    e.withColumn("_cents", cents).filter(assignable)
+      .select(e.columns.map(c => e(c)) :+ coalesce(nearestCent(scored, vNorm, centIdType),
+        lit(-1).cast(centIdType)).as("cent_id"): _*)
+  }
+
+  /** The fold behind [[argmaxAssign]]: over `scored`, an array of
+    * (cent_id, dp, c_norm), the cent_id of the greatest
+    * `dp / (vNorm · c_norm)`, ties to the smallest cent_id; NULL when
+    * every cosine is NULL. `vNorm` rides in the accumulator, so it is
+    * evaluated once per row, not once per centroid. The result does not
+    * depend on the array's order: `>` and `=` are one total preorder on
+    * doubles, and the tie-break is a total order on cent_id.
+    */
+  private[graft] def nearestCent(scored: Column, vNorm: Column,
+                                 centIdType: org.apache.spark.sql.types.DataType): Column = {
+    val zero = struct(vNorm.as("v_norm"), lit(null).cast("double").as("cos"),
+      lit(null).cast(centIdType).as("cent_id"))
+    aggregate(scored, zero, (acc, c) => {
+      val cos = c("dp") / (acc("v_norm") * c("c_norm"))
+      when(cos.isNull, acc)
+        .when(acc("cent_id").isNull || cos > acc("cos") ||
+          (cos === acc("cos") && c("cent_id") < acc("cent_id")),
+          struct(acc("v_norm").as("v_norm"), cos.as("cos"), c("cent_id").as("cent_id")))
+        .otherwise(acc)
+    }, acc => acc("cent_id"))
   }
 
   private[queries] def cosCol(aEmb: String, bEmb: String): Column = {
@@ -342,11 +383,9 @@ object LlmOpsAnn {
     val e = T.embeddings(s, d).filter(col("embedding").isNotNull)
     val cent = e.filter(col("vec_id") < 16)
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
-    // Assignment is an ARGMAX behind the broadcast of the centroid set:
-    // only n (vec_id, cent_id) pairs ever shuffle, never the crossed
-    // vectors — see argmaxAssign for the sort-free two-pass shape.
-    val assign = argmaxAssign(e, cent)
-    val assigned = e.join(assign, "vec_id")
+    // Assignment is an ARGMAX over the collected centroid set: one
+    // narrow projection adds cent_id to e's rows (argmaxAssign)
+    val assigned = argmaxAssign(e, cent)
     val q = assigned.filter(col("vec_id").isin(200, 300, 400))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("cent_id").as("q_cent"))
@@ -429,10 +468,9 @@ object LlmOpsAnn {
     val cent = e.crossJoin(broadcast(kRow)).filter(col("vec_id") < col("k"))
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
     val cosAssign = cosCol("embedding", "c_emb")
-    // sort-free two-pass argmax assignment — see argmaxAssign: only the
-    // n (vec_id, cent_id) pairs shuffle, never the n·√n crossed vectors.
-    val assign = argmaxAssign(e, cent)
-    val nbr = e.join(assign, "vec_id")
+    // shuffle-free argmax assignment (argmaxAssign): each vector folds
+    // over the collected centroid set, no n·√n crossed rows
+    val nbr = argmaxAssign(e, cent)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"),
         col("cent_id").as("n_cent"))
     // probe keeps the window form — it ranks 3 query rows × k centroids
@@ -469,8 +507,8 @@ object LlmOpsAnn {
     * in DECIMAL(20,10) — exact, hence order-insensitive and identical
     * across engines — and the final mean is rounded to FLOAT, which
     * absorbs the cast's half-ulp edge cases. Scale posture: both
-    * assignments are partial-aggregable max_by argmaxes behind a
-    * broadcast of k=√n centroids; the update is one groupBy(cent, dim)
+    * assignments are shuffle-free argmaxes (argmaxAssign) over the
+    * collected k=√n centroids; the update is one groupBy(cent, dim)
     * aggregation over n·d exploded dims (map-side combined); nothing
     * quadratic anywhere.
     */
@@ -537,7 +575,7 @@ object LlmOpsAnn {
     * iteration count exposed (VERDICT r5 item 7): the DECLARED row
     * pins nIter=1 (oracle unchanged); IvfRecallSpec additionally pins
     * recall@5 ≥ 0.9 at nIter=3. Each iteration is the same
-    * partial-aggregable assign (broadcast argmax) + exact-decimal
+    * shuffle-free assign (argmaxAssign) + exact-decimal
     * per-dimension mean; centroids are localCheckpoint'ed per
     * iteration so the plan stays O(1)-deep in nIter.
     */
@@ -557,9 +595,11 @@ object LlmOpsAnn {
     val cent0 = e.crossJoin(broadcast(kRow)).filter(col("vec_id") < col("k"))
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"))
     val cosAssign = cosCol("embedding", "c_emb")
-    def assignTo(cent: DataFrame): DataFrame = argmaxAssign(e, cent)
+    // few-file straggler guard (Tables.spreadExplodeInput) for the ×d
+    // posexplode: the assignment adds no shuffle of its own
+    val eSpread = T.spreadExplodeInput(s, e)
     def lloyd(cent: DataFrame): DataFrame = {
-      val dims = e.join(assignTo(cent), "vec_id")
+      val dims = argmaxAssign(eSpread, cent)
         .select(col("cent_id"), posexplode(col("embedding")).as(Seq("pos0", "val")))
       val upd = dims.groupBy(col("cent_id"), (col("pos0") + 1).as("pos"))
         .agg((sum(col("val").cast("double").cast("decimal(20,10)")).cast("double") /
@@ -569,7 +609,7 @@ object LlmOpsAnn {
     }
     var cent = cent0
     for (_ <- 1 to nIter) cent = lloyd(cent).localCheckpoint()
-    val nbr = e.join(assignTo(cent), "vec_id")
+    val nbr = argmaxAssign(e, cent)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"),
         col("cent_id").as("n_cent"))
     val wProbe = Window.partitionBy(col("vec_id"))

@@ -19,11 +19,14 @@ class PlanQualitySpec extends SparkSpec {
     "sim_cosine_topk"     -> 1, // bounded all-pairs compare
     "sim_threshold_join"  -> 1, // bounded all-pairs compare
     "dedup_simhash"       -> 1, // fingerprint all-pairs histogram
-    "ann_ivf_topk"        -> 4, // 16-row centroid assignment crosses
-    "ann_ivf_nprobe"      -> 6, // √n-row centroid assignment crosses
-    "ann_ivf_kmeans"      -> 3, // √n-row centroid assignment crosses (Lloyd-refined)
-    "ann_ivf_pq"          -> 30, // min(√n,256)-row coarse + 4×16-row PQ codebook assignment crosses (IVFPQ; 34 → 30 in r16 when enc stopped re-joining the coarse argmax)
-    "ann_ivf_pq_rerank"   -> 30, // same IVFPQ pipeline feeding the exact re-rank
+    // the ann_ivf_* / dedup_semdedup* centroid assignment (argmaxAssign)
+    // crosses nothing: each vector folds over the centroid set collected
+    // by a scalar subquery, whose plan (with its 1-row k cross) this
+    // count does not see; ann_ivf_topk and dedup_semdedup dropped out
+    "ann_ivf_nprobe"      -> 2, // 1-row k cross + the 3-row probe × √n centroids cross
+    "ann_ivf_kmeans"      -> 1, // the 3-row probe × Lloyd-refined centroids cross
+    "ann_ivf_pq"          -> 10, // the k, probe and 4×16-row PQ codebook crosses outside the assignment (IVFPQ)
+    "ann_ivf_pq_rerank"   -> 10, // same IVFPQ pipeline feeding the exact re-rank
     "text_tfidf"          -> 1, // N-docs scalar joined as 1-row cross
     "dedup_fuzzy_levenshtein" -> 1, // bounded (≤60-key) all-pairs edit distance
     "ts_gapfill_locf"     -> 1, // 1-row bounds aggregate crossed into the grid generator
@@ -72,8 +75,7 @@ class PlanQualitySpec extends SparkSpec {
     "data_split_grouped"  -> 1, // 1-row leakage-audit aggregate crossed into the |splits|-row report
     "eval_ndcg_rankshift" -> 1, // 1-row IDCG constant crossed into the 1-row DCG aggregate
     "ts_peak_composition" -> 1, // 1-row corpus-total aggregate crossed into the 5·|types|-row peak table
-    "dedup_semdedup"      -> 12, // 1-row k cross + min(√n,256)-row centroid assignment crosses (ann_ivf_* shape); the within-cluster pair join stays an EQUI-join on cent_id — a 13th node is a regression
-    "dedup_semdedup_capped" -> 15, // same k + assignment crosses + the ≤256-row centroid re-attach for ccos ranking; the pair join is an equi-join on (cent_id, bkt)
+    "dedup_semdedup_capped" -> 3, // the k crosses behind the ≤256-row centroid re-attach for ccos ranking; the pair join is an equi-join on (cent_id, bkt), and dedup_semdedup's within-cluster pair join an EQUI-join on cent_id
     "quality_gopher_rules" -> 1, // 1-row top-8 stopword list crossed into the per-doc rule projection
     "text_perplexity_sb"  -> 1, // 1-row (N1, V) en-slice totals crossed into the bigram-type model
     "rank_fusion_rrf"     -> 2) // 1-row BM25 corpus aggregate + 1-row query-vector crosses (text_bm25 / sim shape)

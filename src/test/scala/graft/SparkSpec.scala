@@ -9,6 +9,37 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** The Spark jobs `body` runs, counted by a listener that sees only
+    * jobs submitted under a local-property tag. A fence job submitted
+    * after `body` is awaited, so every job of `body` has been delivered
+    * (one listener queue is FIFO).
+    */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(key, "body")
+      body
+      sc.setLocalProperty(key, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("fence"), "listener never saw the fence job")
+      seen.asScala.count(_ == "body")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+  }
 }
 
 object SparkSpec {

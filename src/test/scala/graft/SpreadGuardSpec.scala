@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Pins the shared few-file explode-straggler guard
+/** Pins the `Tables` helpers: the parquet schema memo behind
+  * `Tables.tbl`, and the shared few-file explode-straggler guard
   * (Tables.spreadExplodeInput) and its partition-health detector
   * (PlanWalk.generateInputPartitionHealth) — the r15 find hoisted into
   * one helper in r16 (VERDICT r15 item 1).
@@ -177,5 +178,58 @@ class SpreadGuardSpec extends SparkSpec {
       assert(offenders.isEmpty,
         s"corpus-sized one-partition generator inputs:\n${offenders.mkString("\n")}")
     } }
+  }
+
+  test("Tables.tbl infers a directory's schema once: the second frame builds with no job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tables_memo").toString
+    spark.read.parquet(s"${sf()}/documents.parquet")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val first = jobsOf(Tables.documents(spark, dir))
+    assert(first >= 1, "the first read infers the schema from a footer")
+    var second: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { second = Tables.documents(spark, dir) } == 0)
+    assert(second.schema == spark.read.parquet(s"$dir/documents.parquet").schema)
+    assert(second.count() == spark.read.parquet(s"${sf()}/documents.parquet").count())
+  }
+
+  test("Tables.tbl infers afresh when the directory is rewritten or the SQL conf changes") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tables_stale").toString
+    Seq((1L, "a b")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    assert(Tables.documents(spark, dir).columns.toSeq == Seq("doc_id", "text"))
+    Seq((1L, "a b", "en")).toDF("doc_id", "text", "lang")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(Tables.documents(spark, dir).collect().toSeq ==
+      Seq(org.apache.spark.sql.Row(1L, "a b", "en")))
+
+    // a TIMESTAMP(NANOS) column reads as Long nanos only under the legacy
+    // conf, and is an illegal parquet type without it
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-0.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000123456789L))
+    w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    try {
+      assert(Tables.events(spark, dir).collect().toSeq == Seq(org.apache.spark.sql.Row(1L,
+        java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1700000000L, 123456000L)))))
+      assert(Tables.tbl(spark, dir, "events").schema("ts").dataType ==
+        org.apache.spark.sql.types.LongType)
+      spark.conf.set(key, "false")
+      val err = intercept[Exception](Tables.tbl(spark, dir, "events"))
+      assert(String.valueOf(err.getMessage).contains("PARQUET_TYPE_ILLEGAL"), err)
+      assert(Tables.events(spark, dir).schema("ts").dataType ==
+        org.apache.spark.sql.types.TimestampType)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkSpec
 
 /** B1 (CSV + rejects) and the §3.4 pipeline end-to-end on temp dirs. */
@@ -19,35 +18,6 @@ class IngestSpec extends SparkSpec {
     val root = Paths.get(dir)
     val s = Files.walk(root)
     try s.iterator().asScala.map(p => root.relativize(p).toString).toSeq.sorted finally s.close()
-  }
-
-  /** The Spark jobs `body` runs, counted by a listener that sees only
-    * jobs submitted under a local-property tag. A fence job submitted
-    * after `body` is awaited, so every job of `body` has been delivered
-    * (one listener queue is FIFO).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobs"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setLocalProperty(key, "body")
-      body
-      sc.setLocalProperty(key, "fence")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!seen.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("fence"), "listener never saw the fence job")
-      seen.asScala.count(_ == "body")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(l)
-    }
   }
 
   test("CsvSource splits valid rows from rejects") {
