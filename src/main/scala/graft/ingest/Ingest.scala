@@ -1,12 +1,11 @@
 package graft.ingest
 
 import java.nio.charset.StandardCharsets.UTF_8
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The reference's batch-ETL loop re-expressed on Spark (SURVEY.md §3.4):
   * discover CSV batches + manifest sidecars, read with reject
@@ -18,22 +17,26 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * full-refresh swap) goes through `org.apache.hadoop.fs.FileSystem`,
   * so upload/lake/archive directories may live on HDFS/S3A/local
   * interchangeably — a 100 TB deployment's landing zone is a shared
-  * store, not the driver's local disk.
+  * store, not the driver's local disk. A run builds the session's
+  * Hadoop conf once and resolves each directory's FileSystem from it.
   *
   * Scale posture: each batch is APPENDED as new parquet files — history
   * is never rewritten — and costs one pass over its own rows:
   *   1. stage: one PERMISSIVE read of the batch flows through align and
   *      dedup into a parquet write to a stage directory
   *      ([[LakeFs.stagePath]]); the reject and loaded counts are observed
-  *      on that write, not counted by separate jobs;
+  *      on that write, not counted by separate jobs. A batch no bigger
+  *      than one of Spark's file splits is deduped in one task, with no
+  *      exchange ([[LakeFs.oneTaskIfSmall]]), so a small batch costs one
+  *      Spark job;
   *   2. gate: over the reject limit the stage is deleted and the table
   *      fails (quarantine) with nothing landed;
   *   3. land: the stage's files move into the table directory
   *      ([[LakeFs.stagedAppend]]), or the stage replaces it for a
   *      full-refresh table ([[LakeFs.replace]]);
   *   4. record: one commit record per landed batch goes into
-  *      `<table>/_graft_log/` (batch id, the written schema, the files,
-  *      the counts); then the inputs are archived.
+  *      `<table>/_graft_log/` ([[LakeFs.commit]]: batch id, the written
+  *      schema, the files, the counts); then the inputs are archived.
   * Add-only column evolution needs no rewrite: every batch is written
   * with the evolved schema, so the newest record's schema reads the
   * whole table ([[readLake]]) and a 100 TB lake absorbs a new column at
@@ -66,6 +69,11 @@ object Ingest {
         */
       fullRefreshTables: Set[String] = Set.empty)
 
+  /** One run's Hadoop conf, built once, and the FileSystem of each of
+    * its directories, resolved from it by the directory's own path. */
+  private final case class Stores(hconf: Configuration, upload: FileSystem, lake: FileSystem,
+                                  archive: FileSystem)
+
   /** One tick of the loop. Deterministic table/file ordering (the
     * reference processed files in a fixed order — D-rule parity).
     * A failing table quarantines its files to the error folder and
@@ -74,10 +82,11 @@ object Ingest {
     */
   def run(spark: SparkSession, conf: Config): Seq[TableReport] = {
     val hconf = spark.sessionState.newHadoopConf()
-    val fs = LakeFs.fs(spark, conf.uploadDir)
-    val root = new Path(conf.uploadDir)
-    if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return Nil
-    val tables = fs.listStatus(root).filter(_.isDirectory)
+    def store(dir: String) = new Path(dir).getFileSystem(hconf)
+    val fs = store(conf.uploadDir)
+    if (!LakeFs.isDirectory(fs, conf.uploadDir)) return Nil
+    val stores = Stores(hconf, fs, store(conf.lakeDir), store(conf.archiveDir))
+    val tables = fs.listStatus(new Path(conf.uploadDir)).filter(_.isDirectory)
       .map(_.getPath).sortBy(_.getName).toSeq
     tables.map { dir =>
       val table = dir.getName
@@ -85,7 +94,7 @@ object Ingest {
       // or quarantined (a partial `b.csv.tmp` upload is none of them)
       val files = listCsv(fs, dir)
       if (files.isEmpty) TableReport(table, Nil, 0, 0, Nil)
-      else try loadTable(spark, conf, fs, dir, files)
+      else try loadTable(spark, conf, stores, dir, files)
       catch {
         case e: Exception =>
           // Default quarantine root: a sibling of the archive dir. Built
@@ -99,31 +108,33 @@ object Ingest {
                 .getOrElse(new Path(a, "error"))
             }
           val err = new Path(errRoot, table)
-          err.getFileSystem(hconf).mkdirs(err)
-          files.foreach(f => moveReplacing(hconf, fs, new Path(f), err))
-          TableReport(table, files, 0, 0, Nil, failed = Some(e.getMessage))
+          val errFs = err.getFileSystem(hconf)
+          errFs.mkdirs(err)
+          files.foreach(f => moveReplacing(hconf, fs, f.getPath, errFs, err))
+          TableReport(table, files.map(_.getPath.toString), 0, 0, Nil, failed = Some(e.getMessage))
       }
     }
   }
 
-  private def listCsv(fs: FileSystem, dir: Path): Seq[String] =
+  /** The table's batch files, sorted by path; their statuses carry the
+    * sizes the batch id and the one-task rule use, so no file is stat'ed
+    * twice. */
+  private def listCsv(fs: FileSystem, dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).iterator
       .filter { s =>
         val n = s.getPath.getName
         n.endsWith(".csv") || n.endsWith(".csv.gz")
       }
-      .map(_.getPath.toString).toSeq.sorted
+      .toSeq.sortBy(_.getPath.toString)
 
-  /** Move `src` into directory `dstDir`, replacing any prior copy —
-    * the Hadoop-FS equivalent of REPLACE_EXISTING (rename refuses to
-    * clobber on most stores). The destination's FileSystem is resolved
-    * from ITS path, not the source's: upload and archive/error may live
-    * on different stores, in which case rename is impossible and the
-    * move degrades to copy+delete.
+  /** Move `src` into directory `dstDir` on `dstFs`, replacing any prior
+    * copy — the Hadoop-FS equivalent of REPLACE_EXISTING (rename refuses
+    * to clobber on most stores). Upload and archive/error may live on
+    * different stores, in which case rename is impossible and the move
+    * degrades to copy+delete.
     */
-  private def moveReplacing(hconf: org.apache.hadoop.conf.Configuration,
-                            srcFs: FileSystem, src: Path, dstDir: Path): Unit = {
-    val dstFs = dstDir.getFileSystem(hconf)
+  private def moveReplacing(hconf: Configuration, srcFs: FileSystem, src: Path,
+                            dstFs: FileSystem, dstDir: Path): Unit = {
     val dst = new Path(dstDir, src.getName)
     if (dstFs.exists(dst)) dstFs.delete(dst, false)
     val ok =
@@ -141,83 +152,32 @@ object Ingest {
     */
   def readLake(spark: SparkSession, conf: Config, table: String): DataFrame = {
     val dir = s"${conf.lakeDir}/$table"
-    loggedSchema(spark, dir) match {
+    readLake(spark, LakeFs.fs(spark, dir), dir)
+  }
+
+  private def readLake(spark: SparkSession, fs: FileSystem, dir: String): DataFrame =
+    LakeFs.loggedSchema(fs, dir) match {
       case Some(schema) => spark.read.schema(schema).parquet(dir)
       case None         => spark.read.option("mergeSchema", "true").parquet(dir)
     }
-  }
-
-  /** The commit log's directory inside a table; Spark's file index skips
-    * `_`-prefixed paths, so readers never see it as data. */
-  private val LogDir = "_graft_log"
-  /** A record's name: its zero-padded sequence number, so name order is
-    * commit order. */
-  private val RecordName = """(\d{20})\.json""".r
-  private val json = new ObjectMapper()
-
-  /** The newest commit record under the table directory `dir`. */
-  private def newestRecord(fs: FileSystem, dir: String): Option[Path] = {
-    val log = try fs.listStatus(new Path(dir, LogDir))
-      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
-    log.map(_.getPath).filter(p => RecordName.matches(p.getName)).maxByOption(_.getName)
-  }
-
-  private def loggedSchema(spark: SparkSession, dir: String): Option[StructType] = {
-    val fs = LakeFs.fs(spark, dir)
-    newestRecord(fs, dir).map { p =>
-      val in = fs.open(p)
-      val rec = try json.readTree(in) finally in.close()
-      DataType.fromJson(rec.get("schema").toString).asInstanceOf[StructType]
-    }
-  }
-
-  /** Writes the next commit record of the table directory `dir`, as one
-    * JSON object: `batch_id`, `schema` (Spark's JSON form of the written
-    * schema), `files` (the data files the batch landed), `loaded`,
-    * `rejected`. Created atomically — a hidden temp file renamed
-    * without overwrite — so a reader sees a whole record or none, and an
-    * existing record is never replaced. One writer per table.
-    */
-  private def commit(spark: SparkSession, dir: String, batchId: String, schema: StructType,
-                     files: Seq[String], loaded: Long, rejected: Long): Unit = {
-    val rec = json.createObjectNode()
-    rec.put("batch_id", batchId)
-    rec.set[JsonNode]("schema", json.readTree(schema.json))
-    val names = rec.putArray("files")
-    files.foreach(names.add)
-    rec.put("loaded", loaded).put("rejected", rejected)
-    val fs = LakeFs.fs(spark, dir)
-    val next = newestRecord(fs, dir).fold(0L) { p =>
-      val RecordName(n) = p.getName: @unchecked
-      n.toLong + 1
-    }
-    val log = fs.makeQualified(new Path(dir, LogDir))
-    val name = f"$next%020d.json"
-    val tmp = new Path(log, s".$name.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(json.writeValueAsBytes(rec)) finally out.close()
-    try FileContext.getFileContext(log.toUri, fs.getConf).rename(tmp, new Path(log, name), Options.Rename.NONE)
-    finally fs.delete(tmp, false)
-  }
 
   /** A batch's identity: a hash of its sorted input file names and sizes. */
-  private def batchId(fs: FileSystem, files: Seq[String]): String = {
+  private def batchId(files: Seq[FileStatus]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    files.map { f =>
-      val p = new Path(f)
-      s"${p.getName}\t${fs.getFileStatus(p).getLen}\n"
-    }.sorted.foreach(l => md.update(l.getBytes(UTF_8)))
+    files.map(s => s"${s.getPath.getName}\t${s.getLen}\n")
+      .sorted.foreach(l => md.update(l.getBytes(UTF_8)))
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  private def loadTable(spark: SparkSession, conf: Config, fs: FileSystem,
-                        dir: Path, files: Seq[String]): TableReport = {
+  private def loadTable(spark: SparkSession, conf: Config, stores: Stores,
+                        dir: Path, files: Seq[FileStatus]): TableReport = {
     val table = dir.getName
     val manifest = {
-      val in = fs.open(new Path(dir, "manifest.txt"))
+      val in = stores.upload.open(new Path(dir, "manifest.txt"))
       try Manifest.parse(new String(in.readAllBytes(), "UTF-8"))
       finally in.close()
     }
+    val paths = files.map(_.getPath.toString)
 
     // One read of the batch. The reject count is observed on the raw
     // PERMISSIVE read, before the corrupt filter, and rides the lake
@@ -226,7 +186,7 @@ object Ingest {
     // is parsed whole, once: the reject count and the landed rows come
     // from the same parse, which is all a cache of the read would buy.
     val rejectObs = new Observation()
-    val valid = CsvSource.permissive(spark, manifest).option("header", "true").csv(files: _*)
+    val valid = CsvSource.permissive(spark, manifest).option("header", "true").csv(paths: _*)
       .observe(rejectObs, count(col(CsvSource.CORRUPT)).as("n_rejected"))
       .filter(col(CsvSource.CORRUPT).isNull).drop(CsvSource.CORRUPT)
 
@@ -236,8 +196,8 @@ object Ingest {
     val target = s"${conf.lakeDir}/$table"
     val fullRefresh = conf.fullRefreshTables.contains(table)
     val (aligned, evolvedCols) =
-      if (LakeFs.isDirectory(spark, target)) {
-        val live = readLake(spark, conf, table).schema
+      if (LakeFs.isDirectory(stores.lake, target)) {
+        val live = readLake(spark, stores.lake, target).schema
         val evolved = SchemaEvolution.evolve(live, valid.schema)
         val newCols = evolved.fieldNames.diff(live.fieldNames).toSeq
         (SchemaEvolution.align(valid, evolved), newCols)
@@ -245,11 +205,13 @@ object Ingest {
 
     // Idempotent re-import within the batch: deterministic keep-first
     // dedup when keys are declared (row_number, not dropDuplicates — D4).
+    // A batch of one split's size takes one task and no exchange.
     val deduped =
       if (conf.dedupKeys.nonEmpty) {
         val w = Window.partitionBy(conf.dedupKeys.map(col): _*)
           .orderBy(aligned.columns.map(c => col(c).asc_nulls_first).toIndexedSeq: _*)
-        aligned.withColumn("_graft_rn", row_number().over(w))
+        LakeFs.oneTaskIfSmall(spark, aligned, files.map(_.getLen).sum, files.size)
+          .withColumn("_graft_rn", row_number().over(w))
           .filter(col("_graft_rn") === 1).drop("_graft_rn")
       } else aligned
 
@@ -269,23 +231,23 @@ object Ingest {
     }
     lazy val loaded = loadedObs.get("n_loaded").asInstanceOf[Long]
     def record(dir: String, landed: Seq[String]): Unit =
-      commit(spark, dir, batchId(fs, files), observed.schema, landed, loaded, rejected)
+      LakeFs.commit(stores.lake, dir, observed.schema, landed,
+        "batch_id" -> batchId(files), "loaded" -> loaded, "rejected" -> rejected)
     // Full refresh is the reference's dimension class: stage-and-swap
     // (LakeFs.replace), so readers never see a partially-replaced table;
     // its record goes into the stage, gated, before the swap.
     if (fullRefresh)
-      LakeFs.replace(spark, target, tag = "refresh") { stage =>
+      LakeFs.replace(stores.lake, target, tag = "refresh") { stage =>
         write(stage)
-        record(stage, LakeFs.dataFiles(spark, stage).map(_.getName))
+        record(stage, LakeFs.dataFiles(stores.lake, stage).map(_.getName))
       }
     else
-      record(target, LakeFs.stagedAppend(spark, target, tag = "append")(write)(rejected <= conf.rejectLimit))
+      record(target, LakeFs.stagedAppend(stores.lake, target, tag = "append")(write)(rejected <= conf.rejectLimit))
 
     // Archive inputs (FS move, driver-side — same as the reference).
-    val hconf = spark.sessionState.newHadoopConf()
     val archive = new Path(conf.archiveDir, table)
-    archive.getFileSystem(hconf).mkdirs(archive)
-    files.foreach(f => moveReplacing(hconf, fs, new Path(f), archive))
-    TableReport(table, files, loaded, rejected, evolvedCols)
+    stores.archive.mkdirs(archive)
+    files.foreach(f => moveReplacing(stores.hconf, stores.upload, f.getPath, stores.archive, archive))
+    TableReport(table, paths, loaded, rejected, evolvedCols)
   }
 }

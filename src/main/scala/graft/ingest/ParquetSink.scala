@@ -44,11 +44,12 @@ object ParquetSink {
     * should retry, or compaction should run in a maintenance window.
     */
   def compact(spark: SparkSession, path: String, targetPartitions: Int): Unit = {
-    val partCols = LakeFs.partitionColumns(spark, path)
+    val fs = LakeFs.fs(spark, path)
+    val partCols = LakeFs.partitionColumns(fs, path)
     val df = spark.read.option("mergeSchema", "true").parquet(path)
     val rewritten =
       if (partCols.isEmpty) df.repartition(targetPartitions)
       else df.repartition(targetPartitions, partCols.map(col): _*)
-    LakeFs.replace(spark, path, tag = "compact")(LakeFs.writeParquet(rewritten, _, partitionBy = partCols))
+    LakeFs.replace(fs, path, tag = "compact")(LakeFs.writeParquet(rewritten, _, partitionBy = partCols))
   }
 }

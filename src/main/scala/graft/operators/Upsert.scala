@@ -38,8 +38,9 @@ object Upsert {
     * micro-batch is avoidable overhead. */
   def merge(spark: SparkSession, path: String, incoming: DataFrame,
             keys: Seq[String], versionCol: String): Unit = {
+    val fs = LakeFs.fs(spark, path)
     val merged =
-      if (!LakeFs.isDirectory(spark, path)) dedupLatest(incoming, keys, versionCol)
+      if (!LakeFs.isDirectory(fs, path)) dedupLatest(incoming, keys, versionCol)
       else {
         val existing = spark.read.parquet(path)
         val all = existing.withColumn("graft_src", lit(0))
@@ -47,7 +48,7 @@ object Upsert {
         dedupLatest(all, keys, versionCol, srcCol = Some("graft_src"))
           .drop("graft_src")
       }
-    LakeFs.replace(spark, path, tag = "upsert")(LakeFs.writeParquet(merged, _))
+    LakeFs.replace(fs, path, tag = "upsert")(LakeFs.writeParquet(merged, _))
   }
 
   /** Partition-scoped MERGE into a Hive-layout lake partitioned by
@@ -77,8 +78,9 @@ object Upsert {
   def intoPartitionedParquet(spark: SparkSession, path: String, incoming: DataFrame,
                              keys: Seq[String], versionCol: String,
                              partCol: String): Long = {
+    val fs = LakeFs.fs(spark, path)
     val merged =
-      if (!LakeFs.isDirectory(spark, path)) dedupLatest(incoming, keys, versionCol)
+      if (!LakeFs.isDirectory(fs, path)) dedupLatest(incoming, keys, versionCol)
       else {
         val touched = incoming.select(col(partCol)).distinct().collect()
           .map(_.get(0))
@@ -104,11 +106,10 @@ object Upsert {
     // Swap the partition directories the staged write ACTUALLY
     // produced (already Hive-escaped), not names recomputed from
     // values — the two can differ and a miss would drop data.
-    val fs = LakeFs.fs(spark, path)
     fs.mkdirs(new Path(path))
     fs.listStatus(new Path(tmp)).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .foreach(s => LakeFs.swap(spark, new Path(path, s.getPath.getName).toString,
+      .foreach(s => LakeFs.swap(fs, new Path(path, s.getPath.getName).toString,
         s.getPath.toString, tag = "upsert"))
     fs.delete(new Path(tmp), true)
     spark.read.parquet(path).count()

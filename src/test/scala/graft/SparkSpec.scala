@@ -10,6 +10,20 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** Runs `body` with the session confs `settings` set, then restores
+    * each key's prior value (or unsets it). */
+  def withSessionConf[A](settings: (String, String)*)(body: => A): A = {
+    val prior = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Session confs under which every file input is bigger than one of
+    * Spark's file splits: the splits are a few bytes long. */
+  val tinySplits: Seq[(String, String)] =
+    Seq("spark.sql.files.maxPartitionBytes" -> "16", "spark.sql.files.openCostInBytes" -> "1")
+
   /** The Spark jobs `body` runs, counted by a listener that sees only
     * jobs submitted under a local-property tag. A fence job submitted
     * after `body` is awaited, so every job of `body` has been delivered

@@ -145,26 +145,68 @@ class IngestSpec extends SparkSpec {
     }
   }
 
-  test("Ingest.run of a small batch into an existing deduped table runs at most 2 Spark jobs") {
-    val root = Files.createTempDirectory("graft_jobs").toString
-    val conf = Ingest.Config(
-      uploadDir = s"$root/upload", lakeDir = s"$root/lake",
-      archiveDir = s"$root/archive", dedupKeys = Seq("id"))
-    write(s"$root/upload/m/manifest.txt", "id,bigint\nv,double precision")
-    write(s"$root/upload/m/b1.csv", "id,v\n1,1.5\n2,2.5\n")
-    Ingest.run(spark, conf)
-    write(s"$root/upload/m/b2.csv", "id,v\n3,3.5\n3,3.5\n4,oops\n")
-    var rep: Seq[Ingest.TableReport] = Nil
-    // the batch parse, reject gate, schema probe, dedup and write share
-    // one pass: the dedup shuffle's map stage and the write
-    val jobs = jobsOf { rep = Ingest.run(spark, conf) }
-    assert(rep.map(r => (r.loaded, r.rejected, r.failed)) == Seq((1L, 1L, None)))
-    assert(jobs <= 2, s"$jobs jobs")
-    // a batch of rejects only, within the limit: its counts are still
-    // observed although no row reaches the write
-    write(s"$root/upload/m/b3.csv", "id,v\nx,y\n")
-    assert(Ingest.run(spark, conf).map(r => (r.loaded, r.rejected, r.failed)) == Seq((0L, 1L, None)))
-    assert(Ingest.readLake(spark, conf, "m").count() == 3)
+  test("small deduped batch: 1 Spark job; past one split: an exchange, same rows") {
+    import org.apache.spark.sql.functions.col
+    val lakes = Seq(true, false).map { small =>
+      withSessionConf((if (small) Nil else tinySplits): _*) {
+        val root = Files.createTempDirectory("graft_jobs").toString
+        val conf = Ingest.Config(
+          uploadDir = s"$root/upload", lakeDir = s"$root/lake",
+          archiveDir = s"$root/archive", dedupKeys = Seq("id"))
+        write(s"$root/upload/m/manifest.txt", "id,bigint\nv,double precision")
+        write(s"$root/upload/m/b1.csv", "id,v\n1,1.5\n2,2.5\n")
+        Ingest.run(spark, conf)
+        // id 3 twice in one file, id 5 once in each file with different values
+        write(s"$root/upload/m/b2a.csv", "id,v\n3,3.5\n3,3.5\n4,oops\n5,9.5\n")
+        write(s"$root/upload/m/b2b.csv", "id,v\n5,1.5\n6,6.5\n")
+        var rep: Seq[Ingest.TableReport] = Nil
+        // the batch parse, reject gate, schema probe, dedup and write share
+        // one pass: one task and one job for a small batch, the exchange's
+        // map stage and the write past one split
+        val jobs = jobsOf { rep = Ingest.run(spark, conf) }
+        assert(rep.map(r => (r.loaded, r.rejected, r.failed)) == Seq((3L, 1L, None)))
+        if (small) assert(jobs == 1, s"$jobs jobs") else assert(jobs >= 2, s"$jobs jobs")
+        // a batch of rejects only, within the limit: its counts are still
+        // observed although no row reaches the write
+        write(s"$root/upload/m/b3.csv", "id,v\nx,y\n")
+        assert(Ingest.run(spark, conf).map(r => (r.loaded, r.rejected, r.failed)) == Seq((0L, 1L, None)))
+        val lake = Ingest.readLake(spark, conf, "m")
+        assert(lake.count() == 5)
+        // keep-first: every column ascending, so the lower value of id 5
+        assert(lake.filter(col("id") === 5).collect().map(_.getDouble(1)).toSeq == Seq(1.5))
+        lake
+      }
+    }
+    assert(LoadAudit.verified(lakes(0), lakes(1)))
+  }
+
+  test("a commit onto a taken record name fails and leaves that record intact") {
+    import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, FilterFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import org.apache.hadoop.util.Progressable
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val dir = Files.createTempDirectory("graft_log").toString
+    val local = LakeFs.fs(spark, dir)
+    val schema = StructType(Seq(StructField("id", LongType)))
+    LakeFs.commit(local, dir, schema, Seq("a.parquet"), "loaded" -> 1L)
+    val rival = Paths.get(s"$dir/_graft_log/00000000000000000001.json")
+    // a second writer lands record 1 after this one has listed the log
+    // and before it renames its record into place
+    val racing = new FilterFileSystem(local) {
+      setConf(local.getConf)
+      override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                          replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+        Files.writeString(rival, """{"rival":true}""")
+        super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+      }
+    }
+    intercept[FileAlreadyExistsException] {
+      LakeFs.commit(racing, dir, schema, Seq("b.parquet"), "loaded" -> 2L)
+    }
+    assert(Files.readString(rival) == """{"rival":true}""")
+    assert(LakeFs.newestRecord(local, dir).map(_.get("rival").asBoolean) == Some(true))
+    assert(tree(s"$dir/_graft_log").filter(n => n.nonEmpty && !n.endsWith(".crc")) ==
+      Seq("00000000000000000000.json", "00000000000000000001.json"))
   }
 
   test("a failing table quarantines to the error folder without aborting the tick") {

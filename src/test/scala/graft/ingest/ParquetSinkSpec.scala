@@ -71,7 +71,7 @@ class ParquetSinkSpec extends SparkSpec {
     }
     val before = spark.read.parquet(dir)
     val beforeCount = before.count()
-    assert(LakeFs.partitionColumns(spark, dir) == Seq("part_year", "part_month"))
+    assert(LakeFs.partitionColumns(LakeFs.fs(spark, dir), dir) == Seq("part_year", "part_month"))
 
     ParquetSink.compact(spark, dir, targetPartitions = 2)
 
@@ -79,7 +79,7 @@ class ParquetSinkSpec extends SparkSpec {
     assert(after.count() == beforeCount)
     // layout survived: partition dirs still exist and Spark still
     // partition-prunes on them
-    assert(LakeFs.partitionColumns(spark, dir) == Seq("part_year", "part_month"))
+    assert(LakeFs.partitionColumns(LakeFs.fs(spark, dir), dir) == Seq("part_year", "part_month"))
     val pruned = after.filter(col("part_year") === 2024 && col("part_month") === 1)
     val plan = pruned.queryExecution.executedPlan.toString()
     assert(plan.contains("PartitionFilters: ["), s"no partition filters in:\n$plan")
@@ -160,6 +160,9 @@ class ParquetSinkSpec extends SparkSpec {
       for (w <- Seq("lake/facts", "lake/dims", "rollup", "partitioned", "compacted", "merged", "parts")) {
         val byFile = codecs(s"$root/$w")
         assert(byFile.nonEmpty && byFile.values.forall(_ == Set("ZSTD")), s"$w with $key=$codec: $byFile")
+        // nor does any of them leave the output committer's _SUCCESS marker
+        val s = Files.walk(Paths.get(s"$root/$w"))
+        try assert(!s.iterator().asScala.exists(_.getFileName.toString == "_SUCCESS"), w) finally s.close()
       }
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
