@@ -1,21 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Box-load variance on a shared machine is ±25% (BASELINE vs r2);
     // per-query medians over nPasses make round-over-round deltas
     // signal instead of noise (VERDICT r2 item 7).
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCores)
     // Warm the page cache, parquet footers, and scan codegen once so
     // per-query timings measure the query, not first-touch JVM costs.
     Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Chunked bench runner: times a NAMED SUBSET of the declared queries
   * in its own JVM and writes a partial per-query JSON. The full-surface
@@ -23,16 +22,8 @@ object BenchChunk {
     val sfDir = args(0)
     val outPath = args(1)
     val wanted = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCores)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try {

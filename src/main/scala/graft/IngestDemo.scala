@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Runnable demo of the ingest loop (SURVEY.md §3.4): builds a synthetic
   * upload dir (two batches, second one evolving the schema, one corrupt
@@ -13,13 +12,7 @@ object IngestDemo {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       Files.createTempDirectory("graft_demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4)
 
     def write(p: String, s: String): Unit = {
       val path = Paths.get(p); Files.createDirectories(path.getParent)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot plan audit over every declared query: reports which plans
   * contain SortAggregate nodes (non-mutable agg buffers silently fall
   * out of hash aggregation — the trap that cost ann_ivf_kmeans a full
@@ -12,11 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8, "ERROR")
     // plan-only consumer: skip the perplexity row's type-count
     // measurement job (ADVICE r15) — the audit then inspects the SPLIT
     // (past-the-ceiling) plan without executing a corpus job at this SF

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextOps.md5Uniform32
 
 /** Synthesize a SKEW-injected copy of an sf dir: every foreign-key
   * column a real pipeline shuffles on is remapped so `hotK` "hot" keys
@@ -38,14 +39,7 @@ object SkewUp {
     val hotPct = if (args.length > 2) args(2).toInt else 30
     val hotK = if (args.length > 3) args(3).toInt else 1
     val embedPct = if (args.length > 4) args(4).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCores)
 
     def write(df: DataFrame, name: String): Unit = {
       import java.nio.file.{Files, Paths}
@@ -62,7 +56,7 @@ object SkewUp {
     }
     // md5-uniform of (salt, pk) as a 32-bit integer; hot iff < hotPct% of 2^32
     def u32(pkCol: String, salt: String): Column =
-      expr(s"CAST(conv(substring(md5(concat('$salt', CAST($pkCol AS STRING))), 1, 8), 16, 10) AS BIGINT)")
+      md5Uniform32(concat(lit(salt), expr(pkCol).cast("string")))
     val hotThresh = (hotPct / 100.0 * 4294967296.0).toLong
     // the K smallest DISTINCT existing keys — deterministic hot targets
     def minKeys(df: DataFrame, c: String): Seq[Long] =
@@ -97,11 +91,11 @@ object SkewUp {
       val embThresh = (embedPct / 100.0 * 4294967296.0).toLong
       // hot vectors: anchor + per-(vec_id, dim) deterministic noise in
       // ±0.01 — a tight cluster one IVF centroid will own
-      val clustered = expr(
-        """transform(sequence(1, size(_anchor)), i -> CAST(
-             element_at(_anchor, i)
-             + (CAST(conv(substring(md5(concat('emb', CAST(vec_id AS STRING), '_', CAST(i AS STRING))), 1, 8), 16, 10) AS BIGINT)
-                / 4294967296.0 - 0.5) * 0.02 AS FLOAT))""")
+      val clustered = transform(sequence(lit(1), size(col("_anchor"))), i =>
+        (element_at(col("_anchor"), i)
+          + (md5Uniform32(concat(lit("emb"), col("vec_id").cast("string"), lit("_"), i.cast("string")))
+            / lit(BigDecimal("4294967296.0")) - lit(BigDecimal("0.5"))) * lit(BigDecimal("0.02")))
+          .cast("float"))
       write(emb
         .withColumn("_anchor", anchorLit)
         .withColumn("embedding",

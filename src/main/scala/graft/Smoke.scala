@@ -1,18 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local mirror of the driver's t1 smoke: SparkEntry.entry rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCores)
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n " + (if (n > 0) "OK" else "EMPTY"))
     spark.stop()

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,13 +18,7 @@ object StreamDemo {
       Files.createTempDirectory("graft_stream").toString)
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     Files.createDirectories(Paths.get(in))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4)
 
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType),

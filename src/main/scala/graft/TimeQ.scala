@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time one or more declared queries in isolation (bench-loop helper):
   * `tools/run.sh graft.TimeQ <sfDir> <query> [query...]` — warms the
   * scan cache like Bench, then prints per-query wall seconds (median of
@@ -11,15 +9,7 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCores)
     // SPARK_GRAFT_PASSES=1 for third-decade probes where a median-of-3
     // would cost hours (r13 sf100 sweep); default stays median-of-3
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt

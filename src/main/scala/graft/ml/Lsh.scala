@@ -4,6 +4,7 @@ import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, HashingTF, MinH
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.TextOps.ngrams
 
 /** Scalable near-dup / similarity search (SURVEY.md §2B B6) — the
   * 100 TB path where any all-pairs join is infeasible. Both entry points
@@ -34,15 +35,7 @@ object Lsh {
     docs
       .filter(size(split(lower(col("text")), " ")) >= shingleLen)
       .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-      .select(col("doc_id"),
-        // slice-of-sequence guards docs shorter than the shingle (Spark
-        // sequence(1, 0) is descending [1, 0]; slice(t, 0, n) throws)
-        expr(
-          s"""array_distinct(transform(
-              slice(sequence(1, greatest(size(t) - ${shingleLen - 1}, 1)),
-                    1, greatest(size(t) - ${shingleLen - 1}, 0)),
-              i -> concat_ws(' ', slice(t, i, $shingleLen))))""")
-          .as("shingles"))
+      .select(col("doc_id"), array_distinct(ngrams("t", shingleLen)).as("shingles"))
 
   def textNearDupPairs(spark: SparkSession, docs: DataFrame,
                        maxJaccardDistance: Double, numHashTables: Int = 8,

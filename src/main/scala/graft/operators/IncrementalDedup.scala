@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TextOps.ngrams
 
 /** Batch-vs-corpus incremental near-dup decisions — the operator a
   * growing-corpus ingestion pipeline trusts most (SURVEY §2A
@@ -24,13 +25,7 @@ object IncrementalDedup {
   /** Distinct 3-gram shingles per doc from (doc_id, text). */
   private def shingles(df: DataFrame): DataFrame =
     df.select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-      .select(col("doc_id"),
-        // slice-of-ascending-sequence: sequence(1, 0) would be
-        // DESCENDING (step -1) and throw on element_at(t, 0)
-        explode(array_distinct(expr(
-          """transform(slice(sequence(1, greatest(size(t) - 2, 1)), 1, greatest(size(t) - 2, 0)),
-             i -> concat_ws(' ', element_at(t, i), element_at(t, i+1), element_at(t, i+2)))"""
-        ))).as("s"))
+      .select(col("doc_id"), explode(array_distinct(ngrams("t", 3))).as("s"))
 
   /** Decisions for `batch` against `corpus` (both (doc_id, text)):
     * one row (batch_doc, corpus_match, jaccard) per REJECTED batch

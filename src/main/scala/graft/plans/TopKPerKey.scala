@@ -153,9 +153,9 @@ object TopKPerKey {
     * Registers the strategy idempotently via the public
     * experimental-methods hook.
     *
-    * Measured honestly (graft.TopKProbe, sf10 = 100× bench scale,
-    * median-of-3): Spark 4's own `InsertWindowGroupLimit` already
-    * rewrites `row_number() <= k` into a partial/final bounded
+    * Measured honestly (sf10 = 100× bench scale, median-of-3): Spark
+    * 4's own `InsertWindowGroupLimit` already rewrites
+    * `row_number() <= k` into a partial/final bounded
     * group-limit — the built-in window formulation is NOT the naive
     * full-sort and remains the recommended Spark-first path. This
     * operator's threshold fast-path (no UnsafeRow copy for rows below

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.md5Uniform32
 
 /** Round-9 corpus-statistics wave: vocabulary richness (hapax/TTR),
   * Heaps'-law vocabulary growth, train→test n-gram novelty, and word
@@ -148,8 +149,7 @@ object CorpusOps2 {
       |       round(CAST(n_novel AS DOUBLE) / CAST(n_test AS DOUBLE), 6) AS novelty
       |FROM novel ORDER BY lang NULLS FIRST""".stripMargin
   ) { (s, d) =>
-    val bucket =
-      expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 2")
+    val bucket = md5Uniform32(col("doc_id").cast("string")) % 2
     // few-file straggler guard (r16; Tables.spreadExplodeInput)
     val base = T.spreadExplodeInput(s, T.documents(s, d)).select(col("lang"),
       split(lower(col("text")), " ").as("t"), bucket.as("b"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.ngrams
 
 /** Round-12 wave: word-level LM perplexity filtering — the CCNet-class
   * quality signal the corpus family still lacked (text_bigram_logprob
@@ -9,10 +10,6 @@ import graft.{Q, Tables => T}
   * logistic model; text_quality is rule heuristics).
   */
 object CorpusOps4 {
-
-  private val bigramsOfT =
-    """transform(slice(sequence(1, greatest(size(t) - 1, 1)), 1, greatest(size(t) - 1, 0)),
-       i -> concat_ws(' ', element_at(t, i), element_at(t, i+1)))"""
 
   /** Per-document perplexity under a word-BIGRAM language model with
     * STUPID BACKOFF (Brants et al. 2007, "Large Language Models in
@@ -127,7 +124,7 @@ object CorpusOps4 {
     val tok = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("lang"), split(lower(col("text")), " ").as("t"))
     val grams = tok.select(col("doc_id"), col("lang"),
-      explode(expr(bigramsOfT)).as("bg"))
+      explode(ngrams("t", 2)).as("bg"))
     val bd = grams.groupBy(col("doc_id"), col("lang"), col("bg"))
       .agg(count(lit(1)).as("k"))
     val enTok = tok.filter(col("lang") === "en")
@@ -137,7 +134,7 @@ object CorpusOps4 {
     // second explode over the en corpus
     val tot = c1.agg(sum(col("c")).cast("long").as("n1"),
       count(lit(1)).cast("long").as("v"))
-    val c2 = enTok.select(explode(expr(bigramsOfT)).as("bg"))
+    val c2 = enTok.select(explode(ngrams("t", 2)).as("bg"))
       .groupBy(col("bg")).agg(count(lit(1)).as("c2"))
     // df ≥ 2 count floor (r14, VERDICT r13 item 4 — the CCNet pruning
     // step): singleton training bigrams, the bulk of Heaps-law type

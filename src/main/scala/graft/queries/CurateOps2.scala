@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.md5Uniform32
 
 /** Round-9 seventh wave: weighted reservoir sampling (A-Res) and the
   * watermark-drop observability row — the sampling depth and streaming
@@ -41,8 +42,7 @@ object CurateOps2 {
       |SELECT lang, rk, doc_id, n_chars FROM r WHERE rk <= 5
       |ORDER BY lang NULLS FIRST, rk""".stripMargin
   ) { (s, d) =>
-    val u = expr(
-      "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) / 4294967296.0")
+    val u = md5Uniform32(col("doc_id").cast("string")) / lit(BigDecimal("4294967296.0"))
     val keyed = T.documents(s, d)
       .select(col("lang"), col("doc_id"), col("n_chars"),
         round(log(u) / col("n_chars").cast("double"), 6).as("k"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.md5Uniform32
 
 /** Round-8 session-3 tenth wave: group-aware dataset splitting (the
   * leakage guard row-level splits can't give) and NDCG ranking
@@ -46,7 +47,7 @@ object CurateOps5 {
       |FROM per CROSS JOIN leak
       |ORDER BY split NULLS FIRST""".stripMargin
   ) { (s, d) =>
-    val bucket = expr("CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 10")
+    val bucket = md5Uniform32(col("user_id").cast("string")) % 10
     val assigned = T.events(s, d).select(col("user_id"), col("event_id"),
       when(bucket < 8, "train").when(bucket < 9, "val").otherwise("test").as("split"))
     val leak = assigned.groupBy(col("user_id"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.{md5Code60, md5Uniform32, ngrams}
 
 /** Round-11 wave: DSIR — Data Selection with Importance Resampling
   * (Xie et al. 2023), the published hashed-n-gram data-selection
@@ -105,14 +106,10 @@ object CurateOps8 {
     val tok = T.spreadExplodeInput(s, T.documents(s, d))
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("lang"), split(lower(col("text")), " ").as("t"))
-    // one explode carries unigrams AND bigrams (slice-of-sequence guards
-    // the 1-token doc, as the shingle rows do)
+    // one explode carries unigrams AND bigrams
     val grams = tok.select(col("doc_id"), col("lang"),
-      explode(concat(col("t"), expr(
-        """transform(slice(sequence(1, greatest(size(t) - 1, 1)), 1, greatest(size(t) - 1, 0)),
-           i -> concat_ws(' ', element_at(t, i), element_at(t, i+1)))"""))).as("g"))
-    val bg = grams.select(col("doc_id"), col("lang"),
-      (expr("CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)") % 1024).as("b"))
+      explode(concat(col("t"), ngrams("t", 2))).as("g"))
+    val bg = grams.select(col("doc_id"), col("lang"), (md5Code60(col("g")) % 1024).as("b"))
     val buckets = bg.groupBy(col("b"))
       .agg(count(lit(1)).as("c_s"),
         count(when(col("lang") === "en", 1)).as("c_t"))
@@ -129,10 +126,9 @@ object CurateOps8 {
       .groupBy(col("doc_id"))
       .agg(min(col("lang")).as("lang"), sum(col("lw_q")).as("score_q"),
         count(lit(1)).cast("long").as("n_grams"))
-    val gumbelQ = expr(
-      """CAST(round(-ln(-ln(
-         (CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) + 0.5)
-         / 4294967296.0)) * 1e6) AS BIGINT)""")
+    val gumbelQ = round(-log(-log(
+        (md5Uniform32(col("doc_id").cast("string")) + lit(BigDecimal("0.5")))
+          / lit(BigDecimal("4294967296.0")))) * 1e6).cast("bigint")
     val kept = scored
       .withColumn("key_q", col("score_q") + gumbelQ)
       .orderBy(col("key_q").desc, col("doc_id").asc)

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.md5Uniform32
 
 /** Round-16 wave: two release-gate curation audits a training-data
   * pipeline runs before a corpus ships — a statistical watermark
@@ -73,9 +74,8 @@ object CurateOps9 {
         .as("pair"))
     val g = pairs.groupBy(col("doc_id")).agg(
       count(lit(1)).as("t_scored"),
-      sum(when(expr(
-        "CAST(conv(substring(md5(concat('wm:', pair)), 1, 8), 16, 10) AS BIGINT) % 2 = 0"),
-        1).otherwise(0)).cast("long").as("n_green"))
+      sum(when(md5Uniform32(concat(lit("wm:"), col("pair"))) % 2 === 0, 1).otherwise(0))
+        .cast("long").as("n_green"))
     g.select(col("doc_id"), col("t_scored"), col("n_green"),
         round((lit(2.0) * col("n_green") - col("t_scored"))
           / sqrt(col("t_scored").cast("double")), 6).as("z"))

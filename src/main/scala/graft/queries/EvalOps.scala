@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import LlmOpsAnn.{HASH_AB, P}
 
 /** Round-8 session-3 thirteenth wave: estimator-quality evaluation —
   * MinHash signature agreement CALIBRATED against exact Jaccard on
@@ -10,13 +11,6 @@ import graft.{Q, Tables => T}
   * actually drives the load peaks?).
   */
 object EvalOps {
-
-  // the SAME hash family as dedup_minhash_lsh (constants duplicated —
-  // the eval must measure the production estimator, not a variant)
-  private val P = 2147483647L // 2^31 − 1
-  private val HASH_AB = Seq(
-    (1299721L, 11L), (1299833L, 37L), (1300021L, 101L), (1300033L, 223L),
-    (1300109L, 499L), (1300211L, 997L), (1300309L, 2003L), (1300427L, 4999L))
 
   /** MinHash estimator calibration: for every banded candidate pair
     * (dedup_minhash_lsh's exact candidate generator), count the
@@ -84,37 +78,9 @@ object EvalOps {
          |ORDER BY k_agree""".stripMargin
     }
   ) { (s, d) =>
-    // few-file straggler guard (r16; Tables.spreadExplodeInput)
-    val sh = T.spreadExplodeInput(s, T.documents(s, d))
-      .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-      .select(col("doc_id"),
-        explode(array_distinct(expr(
-          """transform(slice(sequence(1, greatest(size(t) - 2, 1)), 1, greatest(size(t) - 2, 0)),
-             i -> concat_ws(' ', element_at(t, i), element_at(t, i+1), element_at(t, i+2)))"""
-        ))).as("s"))
-    val codes = sh.select(col("doc_id"),
-      (expr("CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)") % P).as("h"))
-    val m = codes.groupBy(col("doc_id"))
-      .agg(
-        min((col("h") * HASH_AB.head._1 + HASH_AB.head._2) % P).as("mh0"),
-        HASH_AB.zipWithIndex.tail.map { case ((a, b), i) =>
-          min((col("h") * a + b) % P).as(s"mh$i")
-        }: _*)
-    val bands = m.select(col("doc_id"),
-      explode(array((0 until 4).map { j =>
-        struct(lit(j).as("band"), col(s"mh${2 * j}").as("k1"), col(s"mh${2 * j + 1}").as("k2"))
-      }: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.k1"), col("bk.k2"))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.k1") === col("y.k1")
-          && col("x.k2") === col("y.k2") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.as("x").join(sh.as("y"),
-        col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("ia"), col("y.doc_id").as("ib"))
-      .agg(count(lit(1)).as("i"))
+    // dedup_minhash_lsh's own frames: the eval measures the production
+    // estimator, not a variant
+    val (m, cand, sizes, inter) = LlmOpsAnn.minhashBands(s, d)
     val ma = m.toDF(m.columns.map(c => if (c == "doc_id") "ma_id" else s"a_$c"): _*)
     val mb = m.toDF(m.columns.map(c => if (c == "doc_id") "mb_id" else s"b_$c"): _*)
     val agree = (0 until 8).map { i =>

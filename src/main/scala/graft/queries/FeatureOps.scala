@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.md5Uniform32
 
 /** Round-8c feature-engineering/graph wave: per-group quantile grids,
   * hashing-trick featurization, quantized-embedding covariance, and
@@ -97,8 +98,7 @@ object FeatureOps {
     // few-file straggler guard (r16; Tables.spreadExplodeInput)
     T.spreadExplodeInput(s, T.documents(s, d))
       .select(explode(split(lower(col("text")), " ")).as("w"))
-      .select(expr("CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT) % 64").as("bucket"),
-        col("w"))
+      .select((md5Uniform32(col("w")) % 64).as("bucket"), col("w"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_tokens"), countDistinct(col("w")).as("n_types"))
       .orderBy(col("bucket"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.{md5Code60, ngrams}
 
 /** Event-analytics and corpus-packaging operators: the funnel /
   * retention shapes every product-analytics deployment runs on an
@@ -294,13 +295,8 @@ object LlmOpsAnalytics {
     // doc per partition either way.)
     val base = T.documents(s, d)
       .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-      .select(col("doc_id"),
-        explode_outer(expr(
-          """transform(slice(sequence(1, greatest(size(t) - 2, 1)), 1, greatest(size(t) - 2, 0)),
-             i -> concat_ws(' ', element_at(t, i), element_at(t, i+1), element_at(t, i+2)))"""
-        )).as("sStr"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(sStr), 1, 15), 16, 10) AS BIGINT)").as("s"))
+      .select(col("doc_id"), explode_outer(ngrams("t", 3)).as("sStr"))
+      .select(col("doc_id"), md5Code60(col("sStr")).as("s"))
       .groupBy(col("doc_id"))
       .agg(min(col("s")).as("mb1"), max(col("s")).as("mb2"))
       .select(col("doc_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.{md5Code60, ngrams}
 
 /** Sketch-based near-dup (MinHash+LSH banding, SimHash) and bucketed ANN
   * (IVF) — the 100 TB-scale variants of the brute-force similarity rows.
@@ -12,8 +13,6 @@ import graft.{Q, Tables => T}
   * the probabilistic spark.ml LSH (§2B B6) which is unit-tested instead.
   */
 object LlmOpsAnn {
-
-  private val P = 2147483647L // 2^31 − 1
 
   /** SimHash fingerprints from (doc_id, h) token-code rows in ONE
     * grouped pass (r16): the 32 per-bit ±1 balances are 32 aggregate
@@ -34,9 +33,53 @@ object LlmOpsAnn {
           when(col(s"bal$j") > 0, lit(1L << j)).otherwise(lit(0L))
         }.reduce(_ + _).as("simhash"))
   }
-  private val HASH_AB = Seq(
+  /** The MinHash family of dedup_minhash_lsh and eval_minhash_accuracy:
+    * h ↦ (a·h + b) mod P over the shingle codes, one (a, b) per minhash.
+    */
+  private[queries] val P = 2147483647L // 2^31 − 1
+  private[queries] val HASH_AB = Seq(
     (1299721L, 11L), (1299833L, 37L), (1300021L, 101L), (1300033L, 223L),
     (1300109L, 499L), (1300211L, 997L), (1300309L, 2003L), (1300427L, 4999L))
+
+  /** The banded-MinHash frames over the corpus' distinct 3-gram
+    * shingles, shared by dedup_minhash_lsh and eval_minhash_accuracy so
+    * that the evaluation measures the production estimator:
+    *  - `m`: (doc_id, mh0..mh7), the 8 minhashes per doc;
+    *  - `cand`: (a, b), a < b, the pairs sharing a band of 2 minhashes
+    *    (4 bands; a band-bucket equi-join, cost ∝ bucket collisions);
+    *  - `sizes`: (doc_id, n), distinct shingles per doc;
+    *  - `inter`: (ia, ib, i), shared shingles per pair that shares any.
+    */
+  private[queries] def minhashBands(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    // few-file straggler guard (r16; Tables.spreadExplodeInput)
+    val sh = T.spreadExplodeInput(s, T.documents(s, d))
+      .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
+      .select(col("doc_id"), explode(array_distinct(ngrams("t", 3))).as("s"))
+    val codes = sh.select(col("doc_id"), (md5Code60(col("s")) % P).as("h"))
+    val m = codes.groupBy(col("doc_id"))
+      .agg(
+        min((col("h") * HASH_AB.head._1 + HASH_AB.head._2) % P).as("mh0"),
+        HASH_AB.zipWithIndex.tail.map { case ((a, b), i) =>
+          min((col("h") * a + b) % P).as(s"mh$i")
+        }: _*)
+    val bands = m.select(col("doc_id"),
+      explode(array((0 until 4).map { j =>
+        struct(lit(j).as("band"), col(s"mh${2 * j}").as("k1"), col(s"mh${2 * j + 1}").as("k2"))
+      }: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band"), col("bk.k1"), col("bk.k2"))
+    val cand = bands.as("x").join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.k1") === col("y.k1")
+          && col("x.k2") === col("y.k2") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+      .distinct()
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val inter = sh.as("x").join(sh.as("y"),
+        col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
+      .groupBy(col("x.doc_id").as("ia"), col("y.doc_id").as("ib"))
+      .agg(count(lit(1)).as("i"))
+    (m, cand, sizes, inter)
+  }
 
   /** MinHash/LSH near-dup: distinct 3-gram shingles → md5 codes →
     * 8 minhashes → 4 bands of 2 → band-bucket equi-join for candidates →
@@ -84,39 +127,7 @@ object LlmOpsAnn {
          |ORDER BY cand.a NULLS FIRST, cand.b NULLS FIRST""".stripMargin
     }
   ) { (s, d) =>
-    // few-file straggler guard (r16; Tables.spreadExplodeInput)
-    val sh = T.spreadExplodeInput(s, T.documents(s, d))
-      .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-      .select(col("doc_id"),
-        // slice-of-sequence guards the <3-token doc (Spark sequence(1, 0)
-        // is descending [1, 0]; element_at(t, 0) throws)
-        explode(array_distinct(expr(
-          """transform(slice(sequence(1, greatest(size(t) - 2, 1)), 1, greatest(size(t) - 2, 0)),
-             i -> concat_ws(' ', element_at(t, i), element_at(t, i+1), element_at(t, i+2)))"""
-        ))).as("s"))
-    val codes = sh.select(col("doc_id"),
-      (expr("CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)") % P).as("h"))
-    val m = codes.groupBy(col("doc_id"))
-      .agg(
-        min((col("h") * HASH_AB.head._1 + HASH_AB.head._2) % P).as("mh0"),
-        HASH_AB.zipWithIndex.tail.map { case ((a, b), i) =>
-          min((col("h") * a + b) % P).as(s"mh$i")
-        }: _*)
-    val bands = m.select(col("doc_id"),
-      explode(array((0 until 4).map { j =>
-        struct(lit(j).as("band"), col(s"mh${2 * j}").as("k1"), col(s"mh${2 * j + 1}").as("k2"))
-      }: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.k1"), col("bk.k2"))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.k1") === col("y.k1")
-          && col("x.k2") === col("y.k2") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.as("x").join(sh.as("y"),
-        col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("ia"), col("y.doc_id").as("ib"))
-      .agg(count(lit(1)).as("i"))
+    val (_, cand, sizes, inter) = minhashBands(s, d)
     val i0 = coalesce(col("i"), lit(0L))
     cand
       .join(inter, col("a") === col("ia") && col("b") === col("ib"), "left")
@@ -167,7 +178,7 @@ object LlmOpsAnn {
       .select(col("doc_id"),
         explode(array_distinct(split(lower(col("text")), " "))).as("t"))
       .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)").as("h"))
+        md5Code60(col("t")).as("h"))
     // r16 (guide §2.3, shuffle fewer bytes): the old shape exploded
     // every token-code row 32× (one row per bit) and aggregated twice
     // (doc_id,j → doc_id). The 32 per-bit balances fit in one grouped
@@ -219,7 +230,7 @@ object LlmOpsAnn {
       .select(col("doc_id"),
         explode(array_distinct(split(lower(col("text")), " "))).as("t"))
       .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)").as("h"))
+        md5Code60(col("t")).as("h"))
     // NOT simhashFp (r16): the single-pass 32-column variant measured
     // FASTER at sf0.1 (2.14 → 1.50 s) but ~25 % SLOWER at sf1 (A/B on
     // one box/day: 8.8–9.3 s for this explode shape vs 11.5 s

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.md5Uniform32
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between raw ingest and training: deterministic train/val/test
@@ -32,7 +33,7 @@ object LlmOpsCurate {
       |GROUP BY split
       |ORDER BY split NULLS FIRST""".stripMargin
   ) { (s, d) =>
-    val bucket = expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100")
+    val bucket = md5Uniform32(col("doc_id").cast("string")) % 100
     T.documents(s, d)
       .select(
         when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test").as("split"),
@@ -227,8 +228,7 @@ object LlmOpsCurate {
       |FROM scored GROUP BY lang
       |ORDER BY lang NULLS FIRST""".stripMargin
   ) { (s, d) =>
-    val u = expr(
-      "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) / 4294967296.0")
+    val u = md5Uniform32(col("doc_id").cast("string")) / lit(BigDecimal("4294967296.0"))
     val p = least(lit(1.0), col("n_chars") / lit(500.0))
     T.documents(s, d)
       .select(col("lang"), col("n_chars"), u.as("u"), p.as("p"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.{md5Code60, ngrams}
 
 /** Extended LLM-data-pipeline operators (driver mandate): near-dup
   * detection (n-gram Jaccard, embedding cosine), text analysis
@@ -80,15 +81,8 @@ object LlmOpsExt {
     // shuffle whose output is reused by all three consumers (self-join
     // left/right + sizes) — measured 2× faster than per-row
     // array_distinct, which recomputes the explode per consumer
-    val sh = tk.select(col("doc_id"),
-      // slice-of-sequence guards the <3-token doc: sequence(1, 0) is
-      // descending [1, 0] in Spark and element_at(t, 0) throws
-      explode(expr(
-        """transform(slice(sequence(1, greatest(size(t) - 2, 1)), 1, greatest(size(t) - 2, 0)),
-           i -> concat_ws(' ', element_at(t, i), element_at(t, i+1), element_at(t, i+2)))"""
-      )).as("sStr"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(sStr), 1, 15), 16, 10) AS BIGINT)").as("s"))
+    val sh = tk.select(col("doc_id"), explode(ngrams("t", 3)).as("sStr"))
+      .select(col("doc_id"), md5Code60(col("sStr")).as("s"))
       .distinct()
     // df-cap stop-shingle guard (see scaladoc): corpus-hot shingles
     // (df > 32) leave both the intersection and the union
@@ -485,10 +479,8 @@ object LlmOpsExt {
     T.documents(s, d)
       .select(
         col("doc_id"),
-        expr(
-          """aggregate(transform(split(text, ' '),
-                         t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) % 2147483647),
-                       CAST(0 AS BIGINT), (a, b) -> (a * 31 + b) % 2147483647)""").as("fp"))
+        aggregate(transform(split(col("text"), " "), t => md5Code60(t) % 2147483647),
+          lit(0).cast("bigint"), (a, b) => (a * 31 + b) % 2147483647).as("fp"))
       .orderBy(col("doc_id").asc_nulls_first)
       .limit(200)
   }
@@ -597,13 +589,8 @@ object LlmOpsExt {
     // the guard — pathology at Tables.spreadExplodeInput)
     val tk = T.spreadExplodeInput(s, T.documents(s, d))
       .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-    val sh = tk.select(col("doc_id"),
-      explode(expr(
-        """transform(slice(sequence(1, greatest(size(t) - 2, 1)), 1, greatest(size(t) - 2, 0)),
-           i -> concat_ws(' ', element_at(t, i), element_at(t, i+1), element_at(t, i+2)))"""
-      )).as("sStr"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(sStr), 1, 15), 16, 10) AS BIGINT)").as("s"))
+    val sh = tk.select(col("doc_id"), explode(ngrams("t", 3)).as("sStr"))
+      .select(col("doc_id"), md5Code60(col("sStr")).as("s"))
       .distinct()
     // df-cap stop-shingle guard: drop corpus-hot shingles (df > 32) from
     // the whole measure. groupBy, anti-ish join and self-join all hash by

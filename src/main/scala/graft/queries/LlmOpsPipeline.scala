@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.{md5Code60, md5Uniform32, ngrams}
 
 /** End-to-end training-data pipeline COMPOSITIONS — the LLM-corpus
   * counterpart of the TPC-H shapes: single declared rows that chain the
@@ -54,7 +55,7 @@ object LlmOpsPipeline {
     val deduped = quality
       .withColumn("rn", row_number().over(wDup))
       .filter(col("rn") === 1)
-    val bucket = expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100")
+    val bucket = md5Uniform32(col("doc_id").cast("string")) % 100
     deduped
       .select(
         when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test").as("split"),
@@ -115,7 +116,7 @@ object LlmOpsPipeline {
       |GROUP BY 1
       |ORDER BY status NULLS FIRST""".stripMargin
   ) { (s, d) =>
-    val bucket = expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100")
+    val bucket = md5Uniform32(col("doc_id").cast("string")) % 100
     // few-file straggler guard BEFORE the split+5-gram explode (r16;
     // pathology at Tables.spreadExplodeInput)
     val splitDf = T.spreadExplodeInput(s, T.documents(s, d))
@@ -123,18 +124,8 @@ object LlmOpsPipeline {
         when(bucket < 90, "train").otherwise("eval").as("split"),
         split(lower(col("text")), " ").as("t"))
     val sh = splitDf
-      .select(col("split"), col("doc_id"),
-        // slice-of-sequence: Spark sequence(1, 0) is DESCENDING [1, 0]
-        // (step defaults to -1 when start > stop), so a short doc would
-        // hit element_at(t, 0) and throw; slicing an always-ascending
-        // sequence to length max(n, 0) yields [] like DuckDB's
-        // generate_series(1, 0)
-        explode(expr(
-          """transform(slice(sequence(1, greatest(size(t) - 4, 1)), 1, greatest(size(t) - 4, 0)),
-             i -> concat_ws(' ', element_at(t, i), element_at(t, i+1), element_at(t, i+2),
-                            element_at(t, i+3), element_at(t, i+4)))""")).as("sg"))
-      .select(col("split"), col("doc_id"),
-        expr("CAST(conv(substring(md5(sg), 1, 15), 16, 10) AS BIGINT)").as("s"))
+      .select(col("split"), col("doc_id"), explode(ngrams("t", 5)).as("sg"))
+      .select(col("split"), col("doc_id"), md5Code60(col("sg")).as("s"))
       .distinct()
     val tr = sh.filter(col("split") === "train").select(col("s")).distinct()
     val ev = sh.filter(col("split") === "eval")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.md5Uniform32
 
 /** Round-8b distribution/graph/resampling wave: two-sample
   * Kolmogorov–Smirnov, md5-deterministic bootstrap confidence
@@ -177,7 +178,7 @@ object Stats3 {
     val reps = s.range(1, 41).select(col("id").as("b"))
     val draw = reps.crossJoin(num.select(col("rn"))).crossJoin(broadcast(t))
       .select(col("b"),
-        (expr("CAST(conv(substring(md5(CAST(b AS STRING) || ':' || CAST(rn AS STRING)), 1, 8), 16, 10) AS BIGINT)")
+        (md5Uniform32(concat(col("b").cast("string"), lit(":"), col("rn").cast("string")))
           % col("n") + 1).as("idx"))
     val rep = draw.join(num, draw("idx") === num("rn"))
       .groupBy(col("b"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables => T}
+import graft.functions.TextOps.md5Uniform32
 
 /** Round-12 wave: multiple-testing correction — the missing capstone of
   * the hypothesis-test family (welch/anova/mann-whitney/chi2 each test
@@ -202,8 +203,8 @@ object Stats8 {
         explode(expr("sequence(0L, 64L)")).as("b"))
       .select(col("b"), col("cents"),
         when(col("b") === 0, col("is_a")).otherwise(
-          expr("""CAST(conv(substring(md5(concat('perm:', CAST(b AS STRING), ':',
-                 CAST(o_orderkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2 = 0"""))
+          md5Uniform32(concat(lit("perm:"), col("b").cast("string"), lit(":"),
+            col("o_orderkey").cast("string"))) % 2 === 0)
           .as("pa"))
     val g = lab.groupBy(col("b")).agg(
       sum(when(col("pa"), col("cents"))).cast("long").as("sa"),

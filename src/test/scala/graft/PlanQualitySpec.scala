@@ -422,7 +422,10 @@ class PlanQualitySpec extends SparkSpec {
     // the let1 form binds the split as a lambda VARIABLE — never
     // inlined, even through predicate-pushdown substitution
     val bound = docs.select(col("doc_id"),
-        graft.functions.TextOps.tokenShingles(col("text"), 3).as("sh"))
+        graft.functions.TextOps.let1(graft.functions.TextOps.tokens(col("text")), t =>
+          array_distinct(transform(
+            slice(sequence(lit(1), greatest(size(t) - 2, lit(1))), lit(1), greatest(size(t) - 2, lit(0))),
+            i => concat_ws(" ", slice(t, i, lit(3)))))).as("sh"))
       .filter(size(col("sh")) > 0)
     assert(PlanWalk.loopInvariantExpensiveInLambdas(
         bound.queryExecution.sparkPlan).isEmpty,
