@@ -156,10 +156,10 @@ object Ingest {
   }
 
   private def readLake(spark: SparkSession, fs: FileSystem, dir: String): DataFrame =
-    LakeFs.loggedSchema(fs, dir) match {
-      case Some(schema) => spark.read.schema(schema).parquet(dir)
-      case None         => spark.read.option("mergeSchema", "true").parquet(dir)
-    }
+    LakeFs.loggedSchema(fs, dir).fold(mergedRead(spark, dir))(spark.read.schema(_).parquet(dir))
+
+  private def mergedRead(spark: SparkSession, dir: String): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(dir)
 
   /** A batch's identity: a hash of its sorted input file names and sizes. */
   private def batchId(files: Seq[FileStatus]): String = {
@@ -197,7 +197,9 @@ object Ingest {
     val fullRefresh = conf.fullRefreshTables.contains(table)
     val (aligned, evolvedCols) =
       if (LakeFs.isDirectory(stores.lake, target)) {
-        val live = readLake(spark, stores.lake, target).schema
+        // the newest record holds the schema; only a table without one
+        // pays the mergeSchema read, which lists every data file
+        val live = LakeFs.loggedSchema(stores.lake, target).getOrElse(mergedRead(spark, target).schema)
         val evolved = SchemaEvolution.evolve(live, valid.schema)
         val newCols = evolved.fieldNames.diff(live.fieldNames).toSeq
         (SchemaEvolution.align(valid, evolved), newCols)

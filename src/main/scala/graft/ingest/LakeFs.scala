@@ -1,7 +1,9 @@
 package graft.ingest
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, Path}
+import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -14,7 +16,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * worked on the local FS. Every operation takes the `FileSystem` of its
   * path: a caller resolves it once with [[fs]] and passes it to each
   * step, since building the session's Hadoop conf costs more than the
-  * filesystem call it serves.
+  * filesystem call it serves. One exception: [[commit]] writes and
+  * renames a record with `java.nio` when the `FileSystem` is Hadoop's
+  * local one, whose `create` forks `chmod` for each file it makes.
   *
   * The sinks stage their writes: the writer fills [[stagePath]], a gate
   * decides, and only then does anything land in the table directory —
@@ -23,15 +27,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * or whose writer throws, leaves the table as it was and no stage
   * behind.
   *
-  * The lake's file format is parquet with zstd column chunks, and
-  * [[writeParquet]] is the one call that writes it: the ingest stage,
-  * the rollup delta, `ParquetSink` and `Upsert` all go through it, so
-  * the format is stated once and no session conf can change it. Parquet
-  * records the codec per column chunk, so readers need nothing: a lake
-  * whose older files are snappy (written before zstd) reads as one
-  * table, and `ParquetSink.compact` rewrites such files as zstd. It
-  * writes no `_SUCCESS` marker: no reader looks for one, and a staged
-  * append moves only data files.
+  * The lake's file format is stated here once, and [[writeParquet]] is
+  * the one call that writes it: the ingest stage, the rollup delta,
+  * `ParquetSink` and `Upsert` all go through it, and no session conf can
+  * change it. The format is parquet with zstd column chunks at zstd's
+  * default level, in Parquet v2 data pages. A v2 writer encodes a column
+  * whose dictionary pays as RLE_DICTIONARY, and falls back to
+  * DELTA_BINARY_PACKED for int and long columns (a sorted or all-distinct
+  * key costs a few bits a row), to DELTA_BYTE_ARRAY for strings and to
+  * PLAIN for doubles. So another reader of the lake must read zstd, v2
+  * data pages and those encodings, as Spark's vectorized reader does.
+  * Parquet records the codec, the page version and the encodings per
+  * column chunk, so a lake whose older files are snappy or v1 reads as
+  * one table, and `ParquetSink.compact` rewrites such files in the
+  * current format. It writes no `_SUCCESS` marker: no reader looks for
+  * one, and a staged append moves only data files.
   *
   * A table that takes batches keeps a commit log, one JSON record per
   * landed batch under `<table>/_graft_log/` ([[commit]]): the importer
@@ -76,17 +86,19 @@ object LakeFs {
     loop(new Path(path), Vector.empty)
   }
 
-  /** Writes `df` to `dir` as the lake's parquet files (zstd), in Hive
-    * layout by `partitionBy` when given. The `compression` option takes
-    * precedence over `spark.sql.parquet.compression.codec`, so the codec
-    * does not depend on the session's conf. Write options reach the
-    * write's Hadoop conf, where the last one turns off the output
-    * committer's `_SUCCESS` marker.
+  /** Writes `df` to `dir` as the lake's parquet files (zstd, v2 data
+    * pages; see the class doc), in Hive layout by `partitionBy` when
+    * given. The `compression` option takes precedence over
+    * `spark.sql.parquet.compression.codec`, so the codec does not depend
+    * on the session's conf. Write options reach the write's Hadoop conf,
+    * where parquet's writer takes its page version and the output
+    * committer its `_SUCCESS` marker (turned off).
     */
   def writeParquet(df: DataFrame, dir: String, partitionBy: Seq[String] = Nil,
                    mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.partitionBy(partitionBy: _*).mode(mode)
       .option("compression", "zstd")
+      .option("parquet.writer.version", "v2")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(dir)
 
@@ -211,7 +223,11 @@ object LakeFs {
     * HDFS, but the local FS's POSIX rename would overwrite it, so the
     * name is checked first, and a commit that finds it taken fails. The
     * check and the rename are two steps; that is safe under the rule the
-    * sequence number already relies on: one writer per table.
+    * sequence number already relies on: one writer per table. On Hadoop's
+    * local FS the temp file is written and moved with `java.nio`
+    * (`ATOMIC_MOVE`, a POSIX rename): Hadoop's local `create` forks
+    * `chmod` for the file, its `.crc` and a new log directory. Such a
+    * record has no `.crc`, which the local FS reads without a check.
     */
   def commit(fs: FileSystem, dir: String, schema: StructType, files: Seq[String],
              fields: (String, Any)*): Unit = {
@@ -227,11 +243,32 @@ object LakeFs {
     val log = new Path(dir, LogDir)
     val name = new Path(log, f"$next%020d.json")
     val tmp = new Path(log, s".${name.getName}.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(json.writeValueAsBytes(rec)) finally out.close()
+    val bytes = json.writeValueAsBytes(rec)
+    val local = localFile(fs)
+    local match {
+      case Some(file) =>
+        Files.createDirectories(file(log))
+        Files.write(file(tmp), bytes, StandardOpenOption.CREATE_NEW)
+      case None =>
+        val out = fs.create(tmp, false)
+        try out.write(bytes) finally out.close()
+    }
     try {
       if (fs.exists(name)) throw new FileAlreadyExistsException(s"commit record $name already exists")
-      if (!fs.rename(tmp, name)) throw new java.io.IOException(s"commit: rename $tmp -> $name failed")
+      local match {
+        case Some(file) => Files.move(file(tmp), file(name), StandardCopyOption.ATOMIC_MOVE)
+        case None =>
+          if (!fs.rename(tmp, name)) throw new java.io.IOException(s"commit: rename $tmp -> $name failed")
+      }
     } finally fs.delete(tmp, false)
+  }
+
+  /** The `java.nio` path of a Hadoop path when `fs` is Hadoop's local FS
+    * itself; `None` for every other store, and for a `FileSystem` that
+    * wraps the local one, whose calls must go through the wrapper. */
+  private def localFile(fs: FileSystem): Option[Path => java.nio.file.Path] = fs match {
+    case l: LocalFileSystem    => Some(p => l.pathToFile(p).toPath)
+    case r: RawLocalFileSystem => Some(p => r.pathToFile(p).toPath)
+    case _                     => None
   }
 }

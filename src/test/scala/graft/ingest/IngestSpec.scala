@@ -209,6 +209,56 @@ class IngestSpec extends SparkSpec {
       Seq("00000000000000000000.json", "00000000000000000001.json"))
   }
 
+  test("on the local FS a commit onto a taken record name fails, leaving no temp file") {
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, LocalFileSystem, Path}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val dir = Files.createTempDirectory("graft_log_nio").toString
+    val schema = StructType(Seq(StructField("id", LongType)))
+    LakeFs.commit(LakeFs.fs(spark, dir), dir, schema, Seq("a.parquet"), "loaded" -> 1L)
+    val rival = Paths.get(s"$dir/_graft_log/00000000000000000001.json")
+    // Hadoop's local FS itself, so the record goes through java.nio; a
+    // second writer lands record 1 just after this one has listed the log
+    val racing = new LocalFileSystem() {
+      override def listStatus(f: Path): Array[FileStatus] = {
+        val listed = super.listStatus(f)
+        if (f.getName == "_graft_log") Files.writeString(rival, """{"rival":true}""")
+        listed
+      }
+    }
+    racing.initialize(java.net.URI.create("file:///"), spark.sessionState.newHadoopConf())
+    intercept[FileAlreadyExistsException] {
+      LakeFs.commit(racing, dir, schema, Seq("b.parquet"), "loaded" -> 2L)
+    }
+    assert(Files.readString(rival) == """{"rival":true}""")
+    assert(tree(s"$dir/_graft_log") == Seq("", "00000000000000000000.json", "00000000000000000001.json"))
+  }
+
+  test("a log of Hadoop-written records takes a java.nio record, and both read") {
+    import org.apache.hadoop.fs.FilterFileSystem
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val dir = Files.createTempDirectory("graft_log_mixed").toString
+    val local = LakeFs.fs(spark, dir)
+    // a FileSystem that wraps the local one keeps Hadoop's create and
+    // rename, as every record had before java.nio: each has a .crc
+    val hadoop = new FilterFileSystem(local) { setConf(local.getConf) }
+    val old = StructType(Seq(StructField("id", LongType)))
+    LakeFs.commit(hadoop, dir, old, Seq("a.parquet"), "loaded" -> 1L)
+    LakeFs.commit(hadoop, dir, old, Seq("b.parquet"), "loaded" -> 2L)
+    assert(LakeFs.newestRecord(local, dir).map(_.get("loaded").asLong) == Some(2L))
+
+    val evolved = old.add(StructField("host", StringType))
+    LakeFs.commit(local, dir, evolved, Seq("c.parquet"), "loaded" -> 3L)
+    assert(tree(s"$dir/_graft_log") == Seq("",
+      ".00000000000000000000.json.crc", ".00000000000000000001.json.crc",
+      "00000000000000000000.json", "00000000000000000001.json", "00000000000000000002.json"))
+    val newest = LakeFs.newestRecord(local, dir).get
+    assert(newest.get("loaded").asLong == 3L && newest.get("files").get(0).asText == "c.parquet")
+    assert(LakeFs.loggedSchema(local, dir) == Some(evolved))
+    // the Hadoop records still read, through their checksums
+    val in = local.open(new org.apache.hadoop.fs.Path(s"$dir/_graft_log/00000000000000000001.json"))
+    try assert(new String(in.readAllBytes(), "UTF-8").contains("b.parquet")) finally in.close()
+  }
+
   test("a failing table quarantines to the error folder without aborting the tick") {
     val root = Files.createTempDirectory("graft_err").toString
     val conf = Ingest.Config(

@@ -2,12 +2,9 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.{col, sum, to_date, to_timestamp}
-import graft.{SparkSpec, Tables => T}
+import graft.{LakeFooters, SparkSpec, Tables => T}
 import graft.operators.{IncrementalRollup, Upsert}
 
 class ParquetSinkSpec extends SparkSpec {
@@ -18,19 +15,17 @@ class ParquetSinkSpec extends SparkSpec {
     Files.writeString(p, content)
   }
 
+  /** The footer of every column of every parquet data file under `dir`. */
+  private def footers(dir: String): Seq[LakeFooters.Column] =
+    LakeFooters.columns(spark.sessionState.newHadoopConf(), dir)
+
   /** The footer codecs of every parquet data file under `dir`, by file. */
-  private def codecs(dir: String): Map[String, Set[String]] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val s = Files.walk(Paths.get(dir))
-    val files = try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
-      finally s.close()
-    files.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-      val cs = try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
-        finally r.close()
-      f -> cs
-    }.toMap
-  }
+  private def codecs(dir: String): Map[String, Set[String]] =
+    footers(dir).groupBy(_.file).map { case (f, cs) => f -> cs.flatMap(_.codecs).toSet }
+
+  /** Whether all pages are v2 data pages, for every data file under `dir`. */
+  private def v2Pages(dir: String): Map[String, Boolean] =
+    footers(dir).groupBy(_.file).map { case (f, cs) => f -> cs.forall(_.v2Pages) }
 
   /** A day's generated batch: six rows over two hosts, sums exact in binary. */
   private def dayRows(day: Int): Seq[(Long, String, String, Double)] =
@@ -160,6 +155,9 @@ class ParquetSinkSpec extends SparkSpec {
       for (w <- Seq("lake/facts", "lake/dims", "rollup", "partitioned", "compacted", "merged", "parts")) {
         val byFile = codecs(s"$root/$w")
         assert(byFile.nonEmpty && byFile.values.forall(_ == Set("ZSTD")), s"$w with $key=$codec: $byFile")
+        // every column chunk of every file is written in v2 data pages
+        val columns = footers(s"$root/$w")
+        assert(columns.forall(_.v2Pages), s"$w: $columns")
         // nor does any of them leave the output committer's _SUCCESS marker
         val s = Files.walk(Paths.get(s"$root/$w"))
         try assert(!s.iterator().asScala.exists(_.getFileName.toString == "_SUCCESS"), w) finally s.close()
@@ -186,10 +184,30 @@ class ParquetSinkSpec extends SparkSpec {
     val updated = IncrementalRollup.update(spark, Ingest.readLake(spark, conf, "cpu"), "ts",
       Seq("host"), Map("v" -> "sum"), s"$root/rollup")
 
-    for (d <- Seq("lake/cpu", "rollup"))
+    for (d <- Seq("lake/cpu", "rollup")) {
       assert(codecs(s"$root/$d").values.toSet == Set(Set("SNAPPY"), Set("ZSTD")), d)
+      // the older files are v1, the landed ones v2, and both read as one table
+      assert(v2Pages(s"$root/$d").values.toSet == Set(false, true), d)
+    }
     val all = frame(dayRows(1) ++ dayRows(2))
     assert(LoadAudit.verified(all, Ingest.readLake(spark, conf, "cpu")))
     assert(LoadAudit.verified(rollup(all), updated))
+  }
+
+  test("an all-distinct bigint key lands delta-packed, smaller than a v1 write of the same frame") {
+    val root = Files.createTempDirectory("graft_delta").toString
+    // a sorted all-distinct key, as the ingest dedup window leaves `id`
+    val df = spark.range(0, 4000, 1, 1).select((col("id") * 7919L).as("id"))
+    LakeFs.writeParquet(df, s"$root/lake")
+    df.write.option("compression", "zstd").parquet(s"$root/v1")
+
+    val landed = footers(s"$root/lake")
+    assert(landed.map(_.column) == Seq("id"), landed)
+    assert(landed.head.v2Pages && landed.head.encodings.contains("DELTA_BINARY_PACKED"), landed)
+    val v1 = footers(s"$root/v1")
+    assert(v1.map(_.column) == Seq("id") && !v1.head.v2Pages, v1)
+    def fileBytes(fs: Seq[LakeFooters.Column]): Long = fs.map(c => Files.size(Paths.get(new java.net.URI(c.file)))).sum
+    assert(fileBytes(landed) < fileBytes(v1), s"v2 ${fileBytes(landed)} B, v1 ${fileBytes(v1)} B")
+    assert(spark.read.parquet(s"$root/lake").orderBy("id").collect().toSeq == df.collect().toSeq)
   }
 }
